@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.multimodal.{Multimodal, Png, Wav}
 import graft.similarity.{Ann, IncrementalSemDedup, Ivf, Pq, RetrievalEval}
+import graft.sources.Partitioned
 import graft.text.{IncrementalDedup, IncrementalNearDup, TextOps}
 
 /** The rest of the dedup family (SURVEY §2.8): SimHash, word n-gram
@@ -1598,18 +1599,7 @@ object DedupQueries {
           val r = df.agg(count(lit(1)), coalesce(sum(col("doc_id")), lit(0L))).head()
           (r.getLong(0), r.getLong(1))
         }
-        def nFiles: Int = {
-          val p = new org.apache.hadoop.fs.Path(s"$path/hashes")
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (!fs.exists(p)) 0
-          else {
-            val it = fs.listFiles(p, true); var n = 0
-            while (it.hasNext) {
-              if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-            }
-            n
-          }
-        }
+        def nFiles: Int = Partitioned.dataFiles(s, s"$path/hashes").size
         val s0 = stat(batch(0L, 8))
         val s1 = stat(batch(1L, 8))
         val before = nFiles
@@ -1754,18 +1744,7 @@ object DedupQueries {
         val emb = Tables.embeddings(s, dir)
         val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
         val path = s"${Scratch.dir}/graft_ivf_compact_$tag"
-        def nFiles: Int = {
-          val p = new org.apache.hadoop.fs.Path(s"$path/corpus")
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (!fs.exists(p)) 0
-          else {
-            val it = fs.listFiles(p, true); var n = 0
-            while (it.hasNext) {
-              if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-            }
-            n
-          }
-        }
+        def nFiles: Int = Partitioned.dataFiles(s, s"$path/corpus").size
         Ivf.writeIndex(emb.filter(col("vec_id") % 3 === 0), "embedding",
           "vec_id", path, nlist = 8, seed = 7L)
         Ivf.appendToIndex(emb.filter(col("vec_id") % 3 === 1), "embedding",

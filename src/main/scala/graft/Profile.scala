@@ -36,6 +36,8 @@ object Profile {
       .config("spark.sql.warehouse.dir", Scratch.sub("warehouse_default"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    // same file: filesystem as the Watchdog-run gate mains
+    graft.sources.LocalFs.install(spark)
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRow]()
     val order = new java.util.concurrent.ConcurrentLinkedQueue[Int]()

@@ -15,6 +15,15 @@ import java.io.File
   * the bench harness deserves the same, not a throttled boot volume.
   *
   * Per-pid subdirectory, deleted on JVM exit (best effort).
+  *
+  * Local filesystem: everything written here through Hadoop (parquet
+  * index tiers, snapshot commits, streaming checkpoints) goes through
+  * the `java.nio`-backed `file:` filesystem that
+  * [[graft.sources.LocalFs.install]] puts on the session. The stock one
+  * forks `chmod`, `readlink` or `ls -ld` for each permission set, link
+  * check and permission read, because Spark ships no `libhadoop`; the NIO
+  * one keeps the CRC sidecars and the same permission bits, owners and
+  * groups without a fork.
   */
 object Scratch {
   lazy val dir: String = {

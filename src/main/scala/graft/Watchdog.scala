@@ -22,6 +22,10 @@ import org.apache.spark.sql.SparkSession
   * magnitude above any healthy query at sf0.1 (max ~20 s idle), low
   * enough that even several pathological queries cannot exhaust the
   * driver's whole-run limit.
+  *
+  * Every gate and benchmark query passes through here, so this is also
+  * where the fork-free `file:` filesystem ([[graft.sources.LocalFs]]) is
+  * installed on the session.
   */
 object Watchdog {
   val DefaultTimeoutSec: Int =
@@ -29,6 +33,7 @@ object Watchdog {
 
   def run[T](spark: SparkSession, name: String,
       timeoutSec: Int = DefaultTimeoutSec)(body: => T): T = {
+    graft.sources.LocalFs.install(spark)
     val group = s"graft-watchdog-$name"
     val f = Future {
       // job group is thread-local — set it on the thread running the body

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 
+import graft.sources.Partitioned
+
 /** Ingest-time incremental SEMANTIC deduplication — the embedding tier
   * completing the incremental-dedup triptych beside the exact hash index
   * ([[graft.text.IncrementalDedup]]) and the MinHash LSH index
@@ -95,24 +97,6 @@ object IncrementalSemDedup {
         .orderBy(col("cell")).collect()
         .map(r => r.getSeq[Double](1).toArray))
 
-  /** All parquet data files under `root` — the pinned snapshot each call
-    * reads so its own append can't leak into the batch being deduped
-    * (the [[graft.text.IncrementalDedup]] device).
-    */
-  private def listFiles(spark: SparkSession, root: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Seq.empty
-    val it = fs.listFiles(p, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith(".parquet"))
-        buf += f.getPath.toString
-    }
-    buf.toSeq
-  }
-
   /** Compact the state: rewrite the accumulated per-batch append files
     * into O(1) files per cell ([[graft.text.IncrementalDedup.compactIndex]]
     * contract; the cell layout is fixed by the frozen quantizer so there
@@ -121,7 +105,7 @@ object IncrementalSemDedup {
     * overwrite.
     */
   def compactIndex(spark: SparkSession, path: String): Unit = {
-    val snap = listFiles(spark, statePath(path))
+    val snap = Partitioned.dataFiles(spark, statePath(path))
     if (snap.isEmpty) return
     val stSchema = StructType(Seq(
       StructField("__id", LongType),
@@ -158,7 +142,7 @@ object IncrementalSemDedup {
       docs: DataFrame,
       idCol: String,
       vecCol: String): Long = {
-    val snap = listFiles(spark, statePath(path))
+    val snap = Partitioned.dataFiles(spark, statePath(path))
     if (snap.isEmpty) return 0L
     val cents = centroids(spark, path)
     val del = docs
@@ -239,7 +223,7 @@ object IncrementalSemDedup {
     // (cell dirs carry the partition value; untouched cells never read)
     val touched = assigned.select(col("__c")).distinct()
       .collect().map(_.getInt(0)).toSet
-    val snap = listFiles(spark, statePath(path))
+    val snap = Partitioned.dataFiles(spark, statePath(path))
     val touchedSnap = snap.filter(f =>
       touched.exists(c => f.contains(s"__cell=$c/")))
     val stSchema = StructType(Seq(
@@ -301,7 +285,7 @@ object IncrementalSemDedup {
     // persisted (pre-append snapshot diff) — consumers re-run an
     // O(batch) semi-join, never the greedy chain
     val newFiles =
-      (listFiles(spark, statePath(path)).toSet -- snap.toSet).toSeq
+      (Partitioned.dataFiles(spark, statePath(path)).toSet -- snap.toSet).toSeq
     if (newFiles.isEmpty) batch.filter(lit(false))
     else batch.join(
       spark.read.schema(StructType(Seq(StructField("__id", LongType))))

@@ -48,7 +48,9 @@ object Ivf {
     * artifacts (the [[IncrementalSemDedup.dropIndex]] contract): without
     * the eviction, an out-of-band index removal within one application
     * would leave [[readCentroids]] serving stale centroids and the
-    * `require(cents.nonEmpty)` guards passing spuriously.
+    * `require(cents.nonEmpty)` guards passing spuriously. A path that
+    * exists but holds no `centroids/` is not an index and is refused
+    * rather than deleted recursively.
     */
   def dropIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
@@ -56,13 +58,17 @@ object Ivf {
     cbCache.remove(cacheKey(spark, path))
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    if (fs.exists(p)) {
+      require(fs.exists(new org.apache.hadoop.fs.Path(p, "centroids")),
+        s"$path holds no centroids/ - not an IVF index, refusing to delete it")
+      fs.delete(p, true)
+    }
   }
 
   /** The persisted coarse quantizer, cell-ordered (memoized — see
     * [[centsCache]]).
     */
-  private def readCentroids(
+  private[graft] def readCentroids(
       spark: org.apache.spark.sql.SparkSession, path: String): Array[Array[Double]] =
     centsCache.computeIfAbsent(cacheKey(spark, path), _ =>
       spark.read.parquet(s"$path/centroids").orderBy(col("cell"))

@@ -73,7 +73,11 @@ object Pq {
       // 8 partitions so the m (=8 by default) concurrent sub-KMeans can
       // each schedule a task without contending for the sample's splits
       ).coalesce(8).cache()
-    sample.count()
+    val sampled = sample.count()
+    // preBounded callers promise a hash-gated sample; the materializing
+    // count is free proof they kept it
+    require(!preBounded || sampled <= 2 * cap,
+      s"preBounded input holds $sampled rows, over 2 x $cap")
     // the m sub-quantizer fits are independent (disjoint coordinate
     // blocks of the same cached sample) — run them concurrently; each is
     // still a distributed KMeans, and the result is order-stable

@@ -63,6 +63,27 @@ object Partitioned {
     walk(new java.io.File(path))
   }
 
+  /** Every parquet data file under `root`, recursively, in listing order
+    * (`_`- and `.`-prefixed names skipped); empty when `root` is absent.
+    * The index tiers read this list as their pinned snapshot, so an
+    * append made while a batch is being deduped cannot leak into it.
+    * A `listStatus` walk: `listFiles` builds a `LocatedFileStatus` per
+    * file, which reads each file's permission, owner and group.
+    */
+  def dataFiles(spark: SparkSession, root: String): Seq[String] = {
+    val dir = new org.apache.hadoop.fs.Path(root)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(d: org.apache.hadoop.fs.Path): Seq[String] =
+      fs.listStatus(d).toSeq.flatMap { st =>
+        val name = st.getPath.getName
+        if (st.isDirectory) walk(st.getPath)
+        else if (name.endsWith(".parquet") && !name.startsWith("_") &&
+            !name.startsWith(".")) Seq(st.getPath.toString)
+        else Nil
+      }
+    if (fs.exists(dir)) walk(dir) else Seq.empty
+  }
+
   /** Exact row count of every `.parquet` file under `path`, from the
     * parquet FOOTERS — O(files) driver-side metadata, never a data scan
     * and never a Spark job. The row-conservation proofs the index
@@ -71,22 +92,8 @@ object Partitioned {
     * schedule + scan for a number the footers already hold.
     */
   def footerRowCount(
-      spark: org.apache.spark.sql.SparkSession, path: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return 0L
-    var n = 0L
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val name = st.getPath.getName
-      if (name.endsWith(".parquet") && !name.startsWith("_") &&
-          !name.startsWith("."))
-        n += footerRowCountOf(conf, st.getPath)
-    }
-    n
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): Long =
+    footerRowCountFiles(spark, dataFiles(spark, path))
 
   /** [[footerRowCount]] over an explicit file list (a pinned snapshot). */
   def footerRowCountFiles(

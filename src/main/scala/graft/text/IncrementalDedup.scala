@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Partitioned
+
 /** Ingest-time incremental exact deduplication — the 100 TB ingestion
   * shape: a daily batch must dedup against the whole corpus WITHOUT
   * rescanning it. The corpus is represented by a persisted content-hash
@@ -48,24 +50,6 @@ object IncrementalDedup {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** All parquet data files currently in the index — the pinned snapshot
-    * [[dedupIncremental]] reads so its own append can't leak into the
-    * batch it is deduping.
-    */
-  private def indexFiles(spark: SparkSession, path: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(hashesPath(path))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
-    val it = fs.listFiles(root, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith(".parquet"))
-        buf += f.getPath.toString
-    }
-    buf.toSeq
-  }
-
   /** Delete the index at `path` (fresh-build convenience for tests and
     * re-runs; a production retrain writes to a new path and swaps).
     */
@@ -92,7 +76,7 @@ object IncrementalDedup {
       spark: SparkSession,
       path: String,
       nBuckets: Int = DefaultBuckets): Unit = {
-    val snap = indexFiles(spark, path)
+    val snap = Partitioned.dataFiles(spark, hashesPath(path))
     if (snap.isEmpty) return
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val hashSchema = StructType(Seq(StructField("__h", StringType)))
@@ -134,7 +118,7 @@ object IncrementalDedup {
       docs: DataFrame,
       textCol: String,
       nBuckets: Int = DefaultBuckets): Long = {
-    val snap = indexFiles(spark, path)
+    val snap = Partitioned.dataFiles(spark, hashesPath(path))
     if (snap.isEmpty) return 0L
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val hashSchema = StructType(Seq(StructField("__h", StringType)))
@@ -195,7 +179,7 @@ object IncrementalDedup {
     // eliminating every survivor the caller consumes after the append.
     // A pinned file list keeps every (re-)execution on the pre-append
     // snapshot, whatever order the caller evaluates in.
-    val snapshot = indexFiles(spark, path)
+    val snapshot = Partitioned.dataFiles(spark, hashesPath(path))
     // Snapshot reads carry an EXPLICIT schema (the IncrementalNearDup
     // device): with a plain file list Spark otherwise infers the schema
     // from parquet footers driver-side — O(files) at any scale.
@@ -228,7 +212,7 @@ object IncrementalDedup {
     // stays deterministic on the pinned file list. `withinBatch` keeps
     // one row per hash, so the semi-join restores exactly the elected
     // survivor rows.
-    val newFiles = (indexFiles(spark, path).toSet -- snapshot.toSet).toSeq
+    val newFiles = (Partitioned.dataFiles(spark, hashesPath(path)).toSet -- snapshot.toSet).toSeq
     if (newFiles.isEmpty) batch.filter(lit(false)) // everything deduped away
     else withinBatch.join(
       spark.read.schema(hashSchema).parquet(newFiles: _*).select(col("__h")),

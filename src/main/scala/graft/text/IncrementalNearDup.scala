@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Partitioned
+
 /** Ingest-time incremental NEAR-duplicate deduplication — the MinHash
   * analog of [[IncrementalDedup]], closing the second half of the 100 TB
   * ingestion story: a daily batch must drop documents that are
@@ -119,24 +121,6 @@ object IncrementalNearDup {
     if (fs.exists(p)) fs.delete(p, true)
   }
 
-  /** All parquet data files under `root` — the pinned snapshot each call
-    * reads so its own append can't leak into the batch being deduped
-    * (the [[IncrementalDedup.dedupIncremental]] device).
-    */
-  private def listFiles(spark: SparkSession, root: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Seq.empty
-    val it = fs.listFiles(p, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith(".parquet"))
-        buf += f.getPath.toString
-    }
-    buf.toSeq
-  }
-
   /** Compact the index: rewrite the accumulated per-batch append files
     * into O(1) files per `(__side, __b)` partition (optionally
     * re-bucketing — the [[IncrementalDedup.compactIndex]] contract for
@@ -154,7 +138,7 @@ object IncrementalNearDup {
     // target bucket count: explicit override > persisted > default —
     // never a caller default silently diverging from the index's layout
     val nb = nBuckets.orElse(meta.map(_.nBuckets)).getOrElse(DefaultBuckets)
-    val snap = listFiles(spark, statePath(path))
+    val snap = Partitioned.dataFiles(spark, statePath(path))
     if (snap.isEmpty) return
     val bandSnap = snap.filter(isBandFile)
     val sigSnap = snap.filter(isSigFile)
@@ -240,7 +224,7 @@ object IncrementalNearDup {
       sigCol: Option[String] = None): Long = {
     val LshMeta(shingleN, numHashes, bands, nBuckets) = m
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    val snap = listFiles(spark, statePath(path))
+    val snap = Partitioned.dataFiles(spark, statePath(path))
     if (snap.isEmpty) return 0L
     // erasure batches are bounded by nature — pin the recomputed state.
     // `sigCol` is the dedupIncremental compute-once contract: a caller
@@ -495,7 +479,7 @@ object IncrementalNearDup {
     val sigSchema = StructType(Seq(
       StructField("__id", idType),
       StructField("__sig", ArrayType(LongType))))
-    val snap = listFiles(spark, statePath(path))
+    val snap = Partitioned.dataFiles(spark, statePath(path))
     val bandSnap = snap.filter(isBandFile)
     val sigSnap = snap.filter(isSigFile)
     val survivors = (if (bandSnap.nonEmpty) {
@@ -553,7 +537,7 @@ object IncrementalNearDup {
     // keeps re-execution deterministic the same way the probe's pinned
     // snapshot does.
     val newSigFiles =
-      (listFiles(spark, statePath(path)).filter(isSigFile).toSet -- sigSnap.toSet).toSeq
+      (Partitioned.dataFiles(spark, statePath(path)).filter(isSigFile).toSet -- sigSnap.toSet).toSeq
     if (newSigFiles.isEmpty) batch.filter(lit(false)) // everything deduped away
     else batch.join(
       spark.read.schema(StructType(Seq(StructField("__id", idType))))

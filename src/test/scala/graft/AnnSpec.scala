@@ -875,6 +875,39 @@ class AnnSpec extends SparkSpec {
         s"sub-centroid ($s,$j) drifted under preBounded")
   }
 
+  test("Pq.train preBounded fails loudly on an input over twice the training cap") {
+    import graft.similarity.Pq
+    // 2 x 65536 + 1 one-dim vectors: no hash gate ran, so the promise is broken
+    val df = spark.range(2L * 65536 + 1).select(array(col("id").cast("double")).as("embedding"))
+    val e = intercept[IllegalArgumentException](
+      Pq.train(df, "embedding", dim = 1, m = 1, k = 2, preBounded = true))
+    assert(e.getMessage.contains("131073"), e.getMessage)
+  }
+
+  test("Ivf.dropIndex evicts the memoized quantizer and refuses a path that is not an index") {
+    import spark.implicits._
+    import graft.similarity.Ivf
+    val path = s"${graft.Scratch.dir}/ivf_drop_${System.nanoTime()}"
+    Ivf.writeIndex(clustered, "embedding", "vec_id", path, nlist = 8, seed = 7L)
+    assert(Ivf.readCentroids(spark, path).length == 8)
+    Ivf.dropIndex(spark, path)
+    assert(!new java.io.File(path).exists)
+    // an out-of-band rebuild at the same path: the dropped quantizer's memo
+    // must not answer for it
+    Seq((0, Seq.fill(16)(1.0))).toDF("cell", "centroid").write.parquet(s"$path/centroids")
+    assert(Ivf.readCentroids(spark, path).map(_.toSeq).toSeq == Seq(Seq.fill(16)(1.0)))
+    Ivf.dropIndex(spark, path)
+    // a directory without centroids/ is refused and left intact; an absent
+    // path is a no-op
+    val other = new java.io.File(s"${graft.Scratch.dir}/ivf_not_index_${System.nanoTime()}")
+    val keep = new java.io.File(other, "keep.txt")
+    other.mkdirs()
+    java.nio.file.Files.writeString(keep.toPath, "x")
+    intercept[IllegalArgumentException](Ivf.dropIndex(spark, other.getPath))
+    assert(keep.exists)
+    Ivf.dropIndex(spark, s"${other.getPath}/absent")
+  }
+
   test("IVF-PQ persisted index: full-probe ADC recall >= 0.9, appends keep the code format") {
     import spark.implicits._
     import graft.similarity.Ivf
