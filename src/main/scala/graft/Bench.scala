@@ -67,6 +67,8 @@ object Bench {
       // catalog-managed tables (Bucketed) land on scratch, not in the repo cwd
       .config("spark.sql.warehouse.dir", Scratch.sub("warehouse_default"))
       .getOrCreate()
+    // before the warm-up's first plan: the codegen cache is sized only once
+    Session.install(spark)
     spark.sparkContext.setLogLevel(
       sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
     // Optional comma-separated query-name filter for targeted local timing

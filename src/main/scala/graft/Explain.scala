@@ -17,8 +17,7 @@ object Explain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // same file: filesystem as the Watchdog-run gate mains
-    graft.sources.LocalFs.install(spark)
+    Session.install(spark)
     // SPARK_GRAFT_EXEC=1: run the query through the same full-output
     // hash-reduce as Bench, then print the POST-EXECUTION adaptive plan —
     // the only place runtime exchange/stage reuse (ReusedExchange,

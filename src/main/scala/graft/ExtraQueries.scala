@@ -823,15 +823,12 @@ object ExtraQueries {
     val ck = s"${Scratch.dir}/x95_ckpt_$stamp"
     val out = s"${Scratch.dir}/x95_sink_$stamp"
     val mem = MemoryStream[(Long, String, Double)]
-    def startQuery() = {
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "2")
-      try mem.toDF().toDF("event_id", "event_type", "value")
+    def startQuery() = graft.streaming.StreamingOps.withBatchConfs(s, keepNoData = true) {
+      mem.toDF().toDF("event_id", "event_type", "value")
         .withColumn("doubled", col("value") * 2)
         .writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", ck)
         .outputMode("append").start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
     val chunk = math.max(1, math.ceil(pts.length / 3.0).toInt)
     val batches = pts.grouped(chunk).toSeq

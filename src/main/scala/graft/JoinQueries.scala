@@ -1584,17 +1584,14 @@ object JoinQueries {
     val sink = "x85_sink"
     s.catalog.dropTempView(sink)
     val mem = MemoryStream[(Long, Long, Double)]
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    val q =
-      try {
-        mem.toDF().toDF("event_id", "user_id", "value")
-          .join(broadcast(cust), Seq("user_id"))
-          .writeStream.format("memory").queryName(sink).outputMode("append")
-          .option("checkpointLocation",
-            Scratch.sub(s"x85_ckpt_${System.nanoTime()}"))
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val q = graft.streaming.StreamingOps.withBatchConfs(s, keepNoData = true) {
+      mem.toDF().toDF("event_id", "user_id", "value")
+        .join(broadcast(cust), Seq("user_id"))
+        .writeStream.format("memory").queryName(sink).outputMode("append")
+        .option("checkpointLocation",
+          Scratch.sub(s"x85_ckpt_${System.nanoTime()}"))
+        .start()
+    }
     val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
     try {
       clicks.grouped(math.max(1, (clicks.length + 2) / 3)).foreach { batch =>

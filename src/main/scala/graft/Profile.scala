@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
 
 /** Dev measurement tool (guide §1): run named queries under the Bench
@@ -15,7 +16,10 @@ import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
   * Prints, per job: duration, task count, shuffle read/write bytes and the
   * first 60 chars of the job's callSite/description. Gaps between jobs
   * (driver-side planning/listing/codegen) show up as the difference
-  * between the query wall total and the job-time sum.
+  * between the query wall total and the job-time sum. Each query's
+  * header line also counts its Janino compiles and their time, so a
+  * query that keeps recompiling (codegen cache misses) shows as a
+  * nonzero count on a warm run (`SPARK_GRAFT_PROFILE_WARM=1`).
   */
 object Profile {
   private final case class JobRow(
@@ -36,8 +40,7 @@ object Profile {
       .config("spark.sql.warehouse.dir", Scratch.sub("warehouse_default"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // same file: filesystem as the Watchdog-run gate mains
-    graft.sources.LocalFs.install(spark)
+    Session.install(spark)
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRow]()
     val order = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
@@ -83,6 +86,7 @@ object Profile {
       }
       jobs.clear(); order.clear(); stageToJob.clear()
       spark.sparkContext.addSparkListener(listener)
+      val (compiles0, compileNs0) = (Session.compiles, CodeGenerator.compileTime)
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val tPlan = System.nanoTime()
@@ -91,7 +95,9 @@ object Profile {
       val t1 = System.nanoTime()
       spark.sparkContext.removeSparkListener(listener)
       Thread.sleep(200) // let straggler listener events drain
-      println(f"\n===== $n  total=${(t1 - t0) / 1e9}%.3fs build=${(tPlan - t0) / 1e9}%.3fs")
+      println(f"\n===== $n  total=${(t1 - t0) / 1e9}%.3fs build=${(tPlan - t0) / 1e9}%.3fs " +
+        f"compiles=${Session.compiles - compiles0}%d " +
+        f"compile=${(CodeGenerator.compileTime - compileNs0) / 1e6}%.0fms")
       var sum = 0L
       val it = order.iterator()
       while (it.hasNext) {

@@ -20,6 +20,8 @@ object Verify {
       // catalog-managed tables (Bucketed) land on scratch, not in the repo cwd
       .config("spark.sql.warehouse.dir", Scratch.sub("warehouse_default"))
       .getOrCreate()
+    // before the first query plans: the codegen cache is sized only once
+    Session.install(spark)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // local-iteration filter: SPARK_GRAFT_ONLY=q1,q2 runs a subset (the

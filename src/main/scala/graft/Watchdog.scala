@@ -24,8 +24,8 @@ import org.apache.spark.sql.SparkSession
   * driver's whole-run limit.
   *
   * Every gate and benchmark query passes through here, so this is also
-  * where the fork-free `file:` filesystem ([[graft.sources.LocalFs]]) is
-  * installed on the session.
+  * where [[Session.install]] (the fork-free `file:` filesystem and the
+  * codegen cache size) is applied to a session its caller did not set up.
   */
 object Watchdog {
   val DefaultTimeoutSec: Int =
@@ -33,7 +33,7 @@ object Watchdog {
 
   def run[T](spark: SparkSession, name: String,
       timeoutSec: Int = DefaultTimeoutSec)(body: => T): T = {
-    graft.sources.LocalFs.install(spark)
+    Session.install(spark)
     val group = s"graft-watchdog-$name"
     val f = Future {
       // job group is thread-local — set it on the thread running the body

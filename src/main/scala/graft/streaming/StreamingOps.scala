@@ -57,10 +57,15 @@ object StreamingOps {
     * consumers (x33/x34/x50/x53/x101: every window eventually closed by
     * the sentinel data batches, whole-sink aggregation) are
     * timing-invariant and keep the default false.
+    *
+    * The confs are session-wide, so the set/start/restore window holds a
+    * lock on the session: two harnesses starting queries on one session
+    * at once take turns, and neither restores over the other's values
+    * while the other's query is starting.
     */
   def withBatchConfs[T](
       s: org.apache.spark.sql.SparkSession, parts: String = "2",
-      keepNoData: Boolean = false)(start: => T): T = {
+      keepNoData: Boolean = false)(start: => T): T = s.synchronized {
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     val prevNoData =
       s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")

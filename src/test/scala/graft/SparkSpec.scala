@@ -19,8 +19,8 @@ trait SparkSpec extends AnyFunSuite {
       // catalog-managed tables (Bucketed) land on scratch, not the repo cwd
       .config("spark.sql.warehouse.dir", Scratch.sub("warehouse_test"))
       .getOrCreate()
-    // the file: filesystem the gate mains get through Watchdog.run
-    graft.sources.LocalFs.install(s)
+    // before the first query plans: the codegen cache is sized only once
+    Session.install(s)
     s
   }
 
