@@ -66,16 +66,8 @@ case class GramCountList(child: Expression, n: Int)
     // Standalone copy: output grams reference this buffer, which must
     // outlive the (possibly reused) row backing the input string.
     val bytes = s.getBytes
-    // Code-point start offsets (byte positions) — one linear scan.
-    val starts = new Array[Int](s.numChars() + 1)
-    var m = 0
-    var off = 0
-    while (off < bytes.length) {
-      starts(m) = off
-      off += UTF8String.numBytesForFirstByte(bytes(off))
-      m += 1
-    }
-    starts(m) = bytes.length
+    val starts = CodePoints.starts(bytes)
+    val m = starts.length - 1
     if (m < n) return new GenericArrayData(Array.empty[Any])
     val counts = new java.util.HashMap[UTF8String, Array[Long]]()
     var i = 0
@@ -106,6 +98,26 @@ case class GramCountList(child: Expression, n: Int)
 
   override protected def withNewChildInternal(newChild: Expression): GramCountList =
     copy(child = newChild)
+}
+
+/** UTF-8 code-point boundaries, shared by the per-row gram kernels. */
+private[functions] object CodePoints {
+  /** Start byte offset of each code point of `bytes`, then `bytes.length`:
+    * code point `i` spans `[starts(i), starts(i + 1))`. One linear scan,
+    * stepping by lead byte as [[UTF8String#numChars]] and `substr` do.
+    */
+  def starts(bytes: Array[Byte]): Array[Int] = {
+    val starts = new Array[Int](bytes.length + 1)
+    var m = 0
+    var off = 0
+    while (off < bytes.length) {
+      starts(m) = off
+      off += UTF8String.numBytesForFirstByte(bytes(off))
+      m += 1
+    }
+    starts(m) = bytes.length
+    if (m == bytes.length) starts else java.util.Arrays.copyOf(starts, m + 1)
+  }
 }
 
 object GramCountList {

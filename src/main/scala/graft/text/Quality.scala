@@ -10,11 +10,14 @@ import org.apache.spark.sql.functions._
   * higher-order array functions and regexes, no UDFs, no shuffle — so a
   * 100 TB corpus pays one codegen'd map pass.
   *
-  * Array-heavy signals bind their intermediates ONCE via the
-  * `element_at(transform(array(x), v => …), 1)` idiom (see
-  * [[TextOps.charShingles]]): interpreted HOF lambdas re-evaluate
-  * referenced outer expressions per element, so the token list, gram
-  * list, etc. are introduced as lambda variables instead.
+  * Array-heavy signals ([[gopherTextStats]], [[lineRepetitionStats]],
+  * [[ngramRepetitionStats]]) bind their intermediates ONCE via the
+  * `element_at(transform(array(x), v => …), 1)` idiom: interpreted HOF
+  * lambdas re-evaluate referenced outer expressions per element, so the
+  * token list, line list, etc. are introduced as lambda variables
+  * instead. Shingle sets, where a per-window `substr` lambda cost
+  * O(length²) per document, come from the native
+  * [[graft.functions.Shingles]] kernel ([[TextOps.charShingles]]).
   */
 object Quality {
 
@@ -37,11 +40,16 @@ object Quality {
     *              +1 form, which keeps idf positive for common terms)
     *
     * The corpus statistics (N, avgdl, per-term df) are computed from the
-    * scored frame itself — two aggregates and a broadcast-sized term
-    * frame; the per-doc pass is one tokenize + join on the term key.
+    * scored frame itself. The text is tokenized once and shuffled once:
+    * one `groupBy` on the doc id gives each document its length and one
+    * term count per distinct lower-cased term, a global aggregate over
+    * those rows gives N, avgdl and each df, and that one-row frame is
+    * broadcast back. A document's score sums its hit terms in `terms`
+    * order; a document without hits scores 0.0.
     * Tokens are lowercased whitespace words, matching [[TextOps.tokens]].
     *
-    * Output: `idCol`, `n_tokens` (|d|), `bm25` for the given terms.
+    * Output: `idCol`, `n_tokens` (|d|), `bm25` for the given terms; one
+    * row per document with at least one token.
     */
   def bm25(
       df: DataFrame,
@@ -50,29 +58,25 @@ object Quality {
       terms: Seq[String],
       k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
+    val tl = terms.map(_.toLowerCase).distinct.zipWithIndex
     val toks = graft.Tables.spread(df)
       .select(col(idCol).as("__id"),
         explode(split(lower(trim(col(textCol))), "\\s+")).as("__w"))
       .filter(length(col("__w")) > 0)
-    val docLen = toks.groupBy(col("__id")).agg(count(lit(1)).as("__dl"))
-    val termHits = toks.filter(col("__w").isInCollection(terms.map(_.toLowerCase)))
-      .groupBy(col("__id"), col("__w")).agg(count(lit(1)).as("__tf"))
-    // corpus stats: N + avgdl in one row; df per term over a tiny frame
-    val stats = docLen.agg(count(lit(1)).as("__n"), avg(col("__dl")).as("__avgdl"))
-    val dfs = termHits.groupBy(col("__w")).agg(count(lit(1)).as("__df"))
-    val scored = termHits
-      .join(broadcast(dfs), "__w")
-      .crossJoin(broadcast(stats))
-      .join(docLen, "__id")
-      .withColumn("__idf",
-        log((col("__n") - col("__df") + 0.5) / (col("__df") + 0.5) + 1.0))
-      .withColumn("__s",
-        col("__idf") * col("__tf") * (k1 + 1) /
-          (col("__tf") + (col("__dl") / col("__avgdl") * b + (1 - b)) * k1))
-      .groupBy(col("__id")).agg(sum(col("__s")).as("__bm25"))
-    docLen.join(scored, Seq("__id"), "left")
-      .select(col("__id").as(idCol), col("__dl").as("n_tokens"),
-        coalesce(col("__bm25"), lit(0.0)).as("bm25"))
+    val perDoc = toks.groupBy(col("__id")).agg(count(lit(1)).as("__dl"),
+      tl.map { case (t, i) => count(when(col("__w") === t, 1)).as(s"__tf$i") }: _*)
+    val stats = perDoc.agg(count(lit(1)).as("__n"), avg(col("__dl")).as("__avgdl") +:
+      tl.map { case (_, i) => count(when(col(s"__tf$i") > 0, 1)).as(s"__df$i") }: _*)
+    val score = tl.foldLeft(lit(0.0)) { case (acc, (_, i)) =>
+      val (tf, dfi) = (col(s"__tf$i"), col(s"__df$i"))
+      val idf = log((col("__n") - dfi + 0.5) / (dfi + 0.5) + 1.0)
+      acc + when(tf > 0,
+        idf * tf * (k1 + 1) /
+          (tf + (col("__dl") / col("__avgdl") * b + (1 - b)) * k1))
+        .otherwise(0.0)
+    }
+    perDoc.crossJoin(broadcast(stats))
+      .select(col("__id").as(idCol), col("__dl").as("n_tokens"), score.as("bm25"))
   }
 
   /** CCNet-style language-model quality signal (Wenzek et al. 2020,

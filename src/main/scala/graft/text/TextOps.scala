@@ -147,36 +147,20 @@ object TextOps {
         avg(length(col(textCol)).cast("double")).as("avg_chars"))
 
   /** Character shingles (n-grams) of the normalized text, as a distinct
-    * array — the unit set for Jaccard/MinHash near-dup.
+    * array — the unit set for Jaccard/MinHash near-dup. One native
+    * [[graft.functions.Shingles]] pass per row; a text shorter than `n`
+    * code points is its own single shingle.
     */
-  def charShingles(text: Column, n: Int): Column = {
-    // Bind the normalized string ONCE as a lambda variable (outer
-    // single-element transform): referencing `normalize(text)` directly
-    // inside the inner lambda would re-evaluate the regexp per element —
-    // interpreted HOF lambdas re-run their whole body per item.
-    element_at(
-      transform(array(normalize(text)), s =>
-        array_distinct(
-          transform(
-            sequence(lit(0), greatest(length(s) - n, lit(0))),
-            i => s.substr(i + 1, lit(n))))),
-      1)
-  }
+  def charShingles(text: Column, n: Int): Column =
+    graft.functions.Shingles.chars(normalize(text), n)
 
   /** Word shingles (n-grams of whitespace tokens of the normalized text),
     * space-joined, as a distinct array — the coarser dedup unit for
-    * paraphrase-ish near-dups (SURVEY §2.8 n-gram Jaccard).
+    * paraphrase-ish near-dups (SURVEY §2.8 n-gram Jaccard). A text with
+    * fewer than `n` tokens has none.
     */
-  def wordShingles(text: Column, n: Int): Column = {
-    element_at(
-      transform(array(split(normalize(text), " ")), w =>
-        when(size(w) < n, array().cast("array<string>"))
-          .otherwise(array_distinct(
-            transform(
-              sequence(lit(1), size(w) - (n - 1)),
-              i => concat_ws(" ", slice(w, i, lit(n))))))),
-      1)
-  }
+  def wordShingles(text: Column, n: Int): Column =
+    graft.functions.Shingles.words(normalize(text), n)
 
   /** MinHash prime: smallest prime > 2^32, so `(a + k·b) mod P` with
     * 32-bit `a`,`b` stays collision-light and fits a long for k ≤ ~2^30.
