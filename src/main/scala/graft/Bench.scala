@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
 
 /** Driver-run benchmark: times every registered query at the given scale
@@ -50,31 +50,22 @@ object Bench {
         .split("\\s+").take(3).toSeq.map(_.toDouble)
     } catch { case _: Throwable => Seq(Double.NaN, Double.NaN, Double.NaN) }
 
+  /** The timed action's frame: `bit_xor` of the `xxhash64` of every
+    * output row of `df`.
+    */
+  def hashReduce(df: DataFrame): DataFrame =
+    df.select(xxhash64(struct(df.columns.map(col): _*)).as("__h"))
+      .agg(expr("bit_xor(__h)"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // 128-wide minhash aggregates must stay inside whole-stage codegen
-      .config("spark.sql.codegen.maxFields", 256)
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill scratch on RAM-backed tmpfs when available — the
-      // host's boot disk is routinely IO-throttled by co-tenants (see
-      // Scratch's header); MB-scale bench shuffles must not pay for it
-      .config("spark.local.dir", Scratch.sub("spark"))
-      // catalog-managed tables (Bucketed) land on scratch, not in the repo cwd
-      .config("spark.sql.warehouse.dir", Scratch.sub("warehouse_default"))
-      .getOrCreate()
-    // before the warm-up's first plan: the codegen cache is sized only once
-    Session.install(spark)
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel(
       sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
     // Optional comma-separated query-name filter for targeted local timing
     // (unset by the round driver → full registry).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = Session.only
     var failed = List.empty[String]
     val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
     // Warm the JVM/codegen/parquet-footer paths once so the first timed
@@ -116,11 +107,8 @@ object Bench {
     val results = selected.map { case (name, fn) =>
       System.err.println(s"[bench] ${java.time.Instant.now()} running $name")
       val t0 = System.nanoTime()
-      try Watchdog.run(spark, name) {
-        val df = fn(spark, sfDir)
-        df.select(xxhash64(struct(df.columns.map(col): _*)).as("__h"))
-          .agg(expr("bit_xor(__h)")).collect()
-      } catch { case e: Throwable =>
+      try Watchdog.run(spark, name)(hashReduce(fn(spark, sfDir)).collect())
+      catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         failed ::= name
       }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.multimodal.{Multimodal, Png, Wav}
 import graft.similarity.{Ann, IncrementalSemDedup, Ivf, Pq, RetrievalEval}
 import graft.sources.Partitioned
+import graft.streaming.StreamingOps
 import graft.text.{IncrementalDedup, IncrementalNearDup, TextOps}
 
 /** The rest of the dedup family (SURVEY §2.8): SimHash, word n-gram
@@ -1520,19 +1521,11 @@ object DedupQueries {
             stats += ((stats.size.toLong, surv.getLong(0), surv.getLong(1)))
             (): Unit
           }
-          .option("checkpointLocation",
-            s"${Scratch.dir}/x45_ckpt_${System.nanoTime()}")
+          .option("checkpointLocation", StreamingOps.checkpointDir("x45"))
           .start()
-        try {
-          val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-          val feeds = Seq(0L, 1L, 2L).map(m => docs.filter(_._1 % 3 == m)) :+
-            docs.filter(_._1 % 3 == 2) // re-ingest of batch 2
-          feeds.foreach { b =>
-            if (System.nanoTime() > deadline)
-              throw new RuntimeException("x45 stream exceeded its 120s deadline")
-            mem.addData(b.toIndexedSeq: _*); q.processAllAvailable()
-          }
-        } finally q.stop()
+        val feeds = Seq(0L, 1L, 2L).map(m => docs.filter(_._1 % 3 == m)) :+
+          docs.filter(_._1 % 3 == 2) // re-ingest of batch 2
+        StreamingOps.drive(q, "x45")(feeds)(b => mem.addData(b.toIndexedSeq: _*))
         val indexRows = s.read.parquet(s"$path/hashes").count()
         (stats.toSeq :+ (99L, indexRows, 0L))
           .toDF("step", "n", "id_sum")
@@ -1903,17 +1896,11 @@ object DedupQueries {
             Ivf.appendToIndex(batch, "embedding", "vec_id", path)
             (): Unit
           }
-          .option("checkpointLocation",
-            s"${Scratch.dir}/x46_ckpt_${System.nanoTime()}")
+          .option("checkpointLocation", StreamingOps.checkpointDir("x46"))
           .start()
-        try {
-          val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-          Seq(rest.filter(_._1 % 3 == 1), rest.filter(_._1 % 3 == 2)).foreach { b =>
-            if (System.nanoTime() > deadline)
-              throw new RuntimeException("x46 stream exceeded its 120s deadline")
-            mem.addData(b.toIndexedSeq: _*); q.processAllAvailable()
-          }
-        } finally q.stop()
+        StreamingOps.drive(q, "x46")(
+          Seq(rest.filter(_._1 % 3 == 1), rest.filter(_._1 % 3 == 2)))(
+          b => mem.addData(b.toIndexedSeq: _*))
         Ivf.cosineTopKIndexed(s, path, emb.filter(col("vec_id") < 20),
           "embedding", "vec_id", k = 3, nprobe = 8)
           .select(col("vec_id"), col("rank"), col("neighbor_id"),
@@ -2053,28 +2040,20 @@ object DedupQueries {
         val sink = "x53_sink"
         s.catalog.dropTempView(sink)
         val mem = MemoryStream[(Long, String, Long, Double)]
-        val q = graft.streaming.StreamingOps.withBatchConfs(s) {
+        val q = StreamingOps.withBatchConfs(s) {
           mem.toDF().toDF("event_id", "event_type", "t", "value")
             .withColumn("event_time", timestamp_micros(expr("t div 1000")))
             .withWatermark("event_time", "40 days")
             .dropDuplicatesWithinWatermark("event_id")
             .select(col("event_id"), col("event_type"), col("value"))
             .writeStream.format("memory").queryName(sink)
-            .option("checkpointLocation",
-              s"${Scratch.dir}/x53_ckpt_${System.nanoTime()}")
+            .option("checkpointLocation", StreamingOps.checkpointDir("x53"))
             .outputMode("append").start()
         }
-        try {
-          val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-          val chunk = math.max(1, math.ceil(pts.length / 3.0).toInt)
-          val batches = pts.grouped(chunk).map(_.toSeq).toSeq :+
-            pts.filter(_._1 % 5 == 0).toSeq // re-delivery storm
-          batches.foreach { b =>
-            if (System.nanoTime() > deadline)
-              throw new RuntimeException("x53 stream exceeded its 120s deadline")
-            mem.addData(b: _*); q.processAllAvailable()
-          }
-        } finally q.stop()
+        val chunk = math.max(1, math.ceil(pts.length / 3.0).toInt)
+        val batches = pts.grouped(chunk).map(_.toSeq).toSeq :+
+          pts.filter(_._1 % 5 == 0).toSeq // re-delivery storm
+        StreamingOps.drive(q, "x53")(batches)(b => mem.addData(b: _*))
         s.table(sink)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n_events"),
@@ -2496,19 +2475,12 @@ object DedupQueries {
             stats += ((stats.size.toLong, surv.getLong(0), surv.getLong(1)))
             (): Unit
           }
-          .option("checkpointLocation",
-            s"${Scratch.dir}/x126_ckpt_${System.nanoTime()}")
+          .option("checkpointLocation", StreamingOps.checkpointDir("x126"))
           .start()
-        try {
-          val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
-          val feeds = Seq(0L, 1L, 2L).map(m => vecs.filter(_._1 % 3 == m)) :+
-            vecs.filter(_._1 % 3 == 2) // re-delivery of batch 2
-          feeds.foreach { b =>
-            if (System.nanoTime() > deadline)
-              throw new RuntimeException("x126 stream exceeded its 180s deadline")
-            mem.addData(b.toIndexedSeq: _*); q.processAllAvailable()
-          }
-        } finally q.stop()
+        val feeds = Seq(0L, 1L, 2L).map(m => vecs.filter(_._1 % 3 == m)) :+
+          vecs.filter(_._1 % 3 == 2) // re-delivery of batch 2
+        StreamingOps.drive(q, "x126", deadlineSec = 180)(feeds)(
+          b => mem.addData(b.toIndexedSeq: _*))
         x126Cents = Some(IncrementalSemDedup.centroids(s, path))
         val idxRows = s.read.parquet(s"$path/state").count()
         (stats.toSeq :+ (99L, idxRows, 0L))
@@ -2670,19 +2642,12 @@ object DedupQueries {
             stats += ((stats.size.toLong, surv.getLong(0), surv.getLong(1)))
             (): Unit
           }
-          .option("checkpointLocation",
-            s"${Scratch.dir}/x122_ckpt_${System.nanoTime()}")
+          .option("checkpointLocation", StreamingOps.checkpointDir("x122"))
           .start()
-        try {
-          val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
-          val feeds = Seq(0L, 1L, 2L).map(m => docs.filter(_._1 % 3 == m)) :+
-            docs.filter(_._1 % 3 == 2) // re-delivery of batch 2
-          feeds.foreach { b =>
-            if (System.nanoTime() > deadline)
-              throw new RuntimeException("x122 stream exceeded its 180s deadline")
-            mem.addData(b.toIndexedSeq: _*); q.processAllAvailable()
-          }
-        } finally q.stop()
+        val feeds = Seq(0L, 1L, 2L).map(m => docs.filter(_._1 % 3 == m)) :+
+          docs.filter(_._1 % 3 == 2) // re-delivery of batch 2
+        StreamingOps.drive(q, "x122", deadlineSec = 180)(feeds)(
+          b => mem.addData(b.toIndexedSeq: _*))
         val sigRows = s.read.parquet(s"$path/state")
           .filter(col("__side") === "s").count()
         (stats.toSeq :+ (99L, sigRows, 0L))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.forecast.{DeepForecaster, Forecast, TimeSeriesForecaster}
 import graft.operators.{Filters, Segmenters}
+import graft.streaming.StreamingOps
 import graft.text.TextOps
 
 /** Registry entries for operators that were implemented (and unit-tested)
@@ -609,7 +610,7 @@ object ExtraQueries {
       "x30_stream_parity",
       (s, dir) =>
         streamParity(s, dir, "x30",
-          ds => graft.streaming.StreamingOps.ewmaStream(ds, alpha = 0.3))
+          ds => StreamingOps.ewmaStream(ds, alpha = 0.3))
           .groupBy(col("series_id").as("event_type"))
           .agg(round(max_by(col("out"), col("t")), 6).as("ewma_last"),
             count(lit(1)).as("n_rows")),
@@ -632,7 +633,7 @@ object ExtraQueries {
       "x31_stream_kalman",
       (s, dir) =>
         streamParity(s, dir, "x31",
-          ds => graft.streaming.StreamingOps.kalmanStream(
+          ds => StreamingOps.kalmanStream(
             ds, q = 0.5, r = 2.0, x0 = None, p0 = 1.0))
           .groupBy(col("series_id").as("event_type"))
           .agg(round(max_by(col("out"), col("t")), 6).as("kalman_last"),
@@ -675,7 +676,7 @@ object ExtraQueries {
         // whole-second window boundary, so bucketing matches the
         // epoch-nanos oracle
         streamWindowParity(s, dir, "x33",
-          in => graft.streaming.StreamingOps.tumblingAgg(
+          in => StreamingOps.tumblingAgg(
             in, "event_time", Seq("event_type"),
             width = "1 hour", delay = "1 second"))
           .select(col("event_type"),
@@ -703,7 +704,7 @@ object ExtraQueries {
       "x34_stream_sessions",
       (s, dir) =>
         streamWindowParity(s, dir, "x34",
-          in => graft.streaming.StreamingOps.sessionAgg(
+          in => StreamingOps.sessionAgg(
             in, "event_time", Seq("event_type"),
             gap = "30 minutes", delay = "1 second"))
           .select(col("event_type"),
@@ -823,7 +824,7 @@ object ExtraQueries {
     val ck = s"${Scratch.dir}/x95_ckpt_$stamp"
     val out = s"${Scratch.dir}/x95_sink_$stamp"
     val mem = MemoryStream[(Long, String, Double)]
-    def startQuery() = graft.streaming.StreamingOps.withBatchConfs(s, keepNoData = true) {
+    def startQuery() = StreamingOps.withBatchConfs(s, keepNoData = true) {
       mem.toDF().toDF("event_id", "event_type", "value")
         .withColumn("doubled", col("value") * 2)
         .writeStream.format("parquet")
@@ -832,13 +833,9 @@ object ExtraQueries {
     }
     val chunk = math.max(1, math.ceil(pts.length / 3.0).toInt)
     val batches = pts.grouped(chunk).toSeq
-    val q1 = startQuery()
-    try { mem.addData(batches.head: _*); q1.processAllAvailable() }
-    finally q1.stop() // the "crash"
-    val q2 = startQuery()
-    try {
-      batches.tail.foreach { b => mem.addData(b: _*); q2.processAllAvailable() }
-    } finally q2.stop()
+    // the first query's stop after batch 1 is the "crash"
+    StreamingOps.drive(startQuery(), "x95")(batches.take(1))(b => mem.addData(b: _*))
+    StreamingOps.drive(startQuery(), "x95")(batches.tail)(b => mem.addData(b: _*))
     s.read.parquet(out)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -878,27 +875,19 @@ object ExtraQueries {
     val q =
       // keepNoData: x93's oracle pins the watermark-effective-during-
       // batch-k drop rule, which needs the between-batch no-data runs
-      graft.streaming.StreamingOps.withBatchConfs(s, keepNoData = true) {
+      StreamingOps.withBatchConfs(s, keepNoData = true) {
         val in = mem.toDF().toDF("event_type", "t", "value")
           .withColumn("event_time", timestamp_micros(expr("t div 1000")))
-        graft.streaming.StreamingOps.tumblingAgg(
+        StreamingOps.tumblingAgg(
           in, "event_time", Seq("event_type"), width = "1 hour", delay = "1 hour")
           .writeStream.format("memory").queryName(sink)
-          .option("checkpointLocation",
-            s"${Scratch.dir}/x93_ckpt_${System.nanoTime()}")
+          .option("checkpointLocation", StreamingOps.checkpointDir("x93"))
           .outputMode("append").start()
       }
-    try {
-      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-      val all = batches.map(_.result()).filter(_.nonEmpty) ++ Seq(
-        Seq(("__sentinel", maxT + 4 * hourNs, 0.0)),
-        Seq(("__sentinel", maxT + 8 * hourNs, 0.0)))
-      all.foreach { b =>
-        if (System.nanoTime() > deadline)
-          throw new RuntimeException("x93 stream exceeded its 120s deadline")
-        mem.addData(b: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
+    val all = batches.map(_.result()).filter(_.nonEmpty) ++ Seq(
+      Seq(("__sentinel", maxT + 4 * hourNs, 0.0)),
+      Seq(("__sentinel", maxT + 8 * hourNs, 0.0)))
+    StreamingOps.drive(q, "x93")(all)(b => mem.addData(b: _*))
     s.table(sink).filter(col("event_type") =!= "__sentinel")
   }
 
@@ -930,27 +919,19 @@ object ExtraQueries {
     s.catalog.dropTempView(sink) // re-invocation safety (smoke tests)
     val mem = MemoryStream[(String, Long, Double)]
     val q =
-      graft.streaming.StreamingOps.withBatchConfs(s) {
+      StreamingOps.withBatchConfs(s) {
         val in = mem.toDF().toDF("event_type", "t", "value")
           .withColumn("event_time", timestamp_micros(expr("t div 1000")))
         agg(in)
           .writeStream.format("memory").queryName(sink)
-          .option("checkpointLocation",
-            s"${Scratch.dir}/${tag}_ckpt_${System.nanoTime()}")
+          .option("checkpointLocation", StreamingOps.checkpointDir(tag))
           .outputMode("append").start()
       }
-    try {
-      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-      val chunk = math.max(1, math.ceil(pts.length / 3.0).toInt)
-      val batches = pts.grouped(chunk).map(_.toSeq) ++ Iterator(
-        Seq(("__sentinel", maxT + 2 * hourNs, 0.0)),
-        Seq(("__sentinel", maxT + 4 * hourNs, 0.0)))
-      batches.foreach { b =>
-        if (System.nanoTime() > deadline)
-          throw new RuntimeException(s"$tag stream exceeded its 120s deadline")
-        mem.addData(b: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
+    val chunk = math.max(1, math.ceil(pts.length / 3.0).toInt)
+    val batches = pts.grouped(chunk).map(_.toSeq).toSeq ++ Seq(
+      Seq(("__sentinel", maxT + 2 * hourNs, 0.0)),
+      Seq(("__sentinel", maxT + 4 * hourNs, 0.0)))
+    StreamingOps.drive(q, tag)(batches)(b => mem.addData(b: _*))
     s.table(sink).filter(col("event_type") =!= "__sentinel")
   }
 
@@ -972,12 +953,11 @@ object ExtraQueries {
     */
   private def streamParity(
       s: org.apache.spark.sql.SparkSession, dir: String, tag: String,
-      kernel: org.apache.spark.sql.Dataset[graft.streaming.StreamingOps.SeriesPoint] =>
-        org.apache.spark.sql.Dataset[graft.streaming.StreamingOps.ScanOut])
+      kernel: org.apache.spark.sql.Dataset[StreamingOps.SeriesPoint] =>
+        org.apache.spark.sql.Dataset[StreamingOps.ScanOut])
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamingOps
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val pts = ev(s, dir)
       .withColumn("__t", row_number().over(
@@ -996,19 +976,11 @@ object ExtraQueries {
       StreamingOps.withBatchConfs(s) {
         kernel(mem.toDS())
           .writeStream.format("memory").queryName(sink)
-          .option("checkpointLocation",
-            s"${Scratch.dir}/${tag}_ckpt_${System.nanoTime()}")
+          .option("checkpointLocation", StreamingOps.checkpointDir(tag))
           .outputMode("append").start()
       }
-    try {
-      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-      val chunk = math.max(1, math.ceil(pts.length / 3.0).toInt)
-      pts.grouped(chunk).foreach { b =>
-        if (System.nanoTime() > deadline)
-          throw new RuntimeException(s"$tag stream exceeded its 120s deadline")
-        mem.addData(b.toSeq: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
+    val chunk = math.max(1, math.ceil(pts.length / 3.0).toInt)
+    StreamingOps.drive(q, tag)(pts.grouped(chunk).toSeq)(b => mem.addData(b.toSeq: _*))
     s.table(sink)
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Joins
+import graft.streaming.StreamingOps
 
 /** Time-series join queries (as-of + interval), the two join shapes the
   * reference gets from `pd.merge_asof` / boolean-mask slicing and a naive
@@ -539,17 +540,10 @@ object JoinQueries {
             applied += Upsert.mergeInto(s, path, batch, "doc_id", "source")
             (): Unit
           }
-          .option("checkpointLocation",
-            s"${Scratch.dir}/x142_ckpt_${System.nanoTime()}")
+          .option("checkpointLocation", StreamingOps.checkpointDir("x142"))
           .start()
-        try {
-          val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-          Seq(a, b, c, a).foreach { batch => // 4th = re-delivery of A
-            if (System.nanoTime() > deadline)
-              throw new RuntimeException("x142 stream exceeded its 120s deadline")
-            mem.addData(batch.toIndexedSeq: _*); q.processAllAvailable()
-          }
-        } finally q.stop()
+        StreamingOps.drive(q, "x142")(Seq(a, b, c, a))( // 4th = re-delivery of A
+          batch => mem.addData(batch.toIndexedSeq: _*))
         require(applied.toSeq == Seq(
           (a.length.toLong, 0L), (b.length.toLong, 0L),
           (0L, c.length.toLong), (a.length.toLong, 0L)),
@@ -714,18 +708,10 @@ object JoinQueries {
               appId = "x149", batchId = batchId)
             (): Unit
           }
-          .option("checkpointLocation",
-            s"${Scratch.dir}/x149_ckpt_${System.nanoTime()}")
+          .option("checkpointLocation", StreamingOps.checkpointDir("x149"))
           .start()
         val waves = Seq(0L, 1L, 2L).map(m => docs.filter(_._1 % 3 == m))
-        try {
-          val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-          waves.foreach { b =>
-            if (System.nanoTime() > deadline)
-              throw new RuntimeException("x149 stream exceeded its 120s deadline")
-            mem.addData(b.toIndexedSeq: _*); q.processAllAvailable()
-          }
-        } finally q.stop()
+        StreamingOps.drive(q, "x149")(waves)(b => mem.addData(b.toIndexedSeq: _*))
         require(Snapshots.latestVersion(s, path) == 3,
           "three micro-batches must commit three versions")
         // checkpoint-recovery replay: the last wave re-delivered under
@@ -1584,23 +1570,16 @@ object JoinQueries {
     val sink = "x85_sink"
     s.catalog.dropTempView(sink)
     val mem = MemoryStream[(Long, Long, Double)]
-    val q = graft.streaming.StreamingOps.withBatchConfs(s, keepNoData = true) {
+    val q = StreamingOps.withBatchConfs(s, keepNoData = true) {
       mem.toDF().toDF("event_id", "user_id", "value")
         .join(broadcast(cust), Seq("user_id"))
         .writeStream.format("memory").queryName(sink).outputMode("append")
-        .option("checkpointLocation",
-          Scratch.sub(s"x85_ckpt_${System.nanoTime()}"))
+        .option("checkpointLocation", StreamingOps.checkpointDir("x85"))
         .start()
     }
-    val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-    try {
-      clicks.grouped(math.max(1, (clicks.length + 2) / 3)).foreach { batch =>
-        if (System.nanoTime() > deadline)
-          throw new RuntimeException("x85 stream exceeded its 120s deadline")
-        mem.addData(batch: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    StreamingOps.drive(q, "x85")(
+      clicks.grouped(math.max(1, (clicks.length + 2) / 3)).toSeq)(
+      batch => mem.addData(batch: _*))
     s.table(sink)
       .groupBy(col("c_nationkey"))
       .agg(count(lit(1)).as("n_clicks"),
@@ -1667,12 +1646,23 @@ object JoinQueries {
       .collect().sortBy(_._3) // arrival ≈ event order → monotone watermark
     val errs = side("error")
     val clicks = side("click")
+    def chunks(a: Array[(Long, Long, Long, Double)]) =
+      a.grouped(math.max(1, math.ceil(a.length / 3.0).toInt))
+        .map(_.toSeq).toSeq
+    // the same far-future sentinel row on both streams, twice
+    val sentinelPairs = if (!sentinels) Seq.empty else {
+      val dayNs = 86400000000000L
+      val maxT = (errs ++ clicks).map(_._3).max
+      Seq(maxT + 2 * dayNs, maxT + 4 * dayNs).map { t =>
+        val b = Seq((-1L, -1L, t, 0.0)); (b, b)
+      }
+    }
     val sink = s"${tag}_sink"
     s.catalog.dropTempView(sink) // re-invocation safety (smoke tests)
     val memE = MemoryStream[(Long, Long, Long, Double)]
     val memC = MemoryStream[(Long, Long, Long, Double)]
     val q =
-      graft.streaming.StreamingOps.withBatchConfs(s) {
+      StreamingOps.withBatchConfs(s) {
         // each side buffers only what the output needs — join state holds
         // full rows, so the payload is trimmed before the watermark
         def in(m: MemoryStream[(Long, Long, Long, Double)], p: String,
@@ -1697,32 +1687,15 @@ object JoinQueries {
             joinType)
           .select(col("e_event_id"), col("e_user_id"), col("c_value"))
           .writeStream.format("memory").queryName(sink)
-          .option("checkpointLocation",
-            s"${Scratch.dir}/${tag}_ckpt_${System.nanoTime()}")
+          .option("checkpointLocation", StreamingOps.checkpointDir(tag))
           .outputMode("append").start()
       }
-    try {
-      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-      def chunks(a: Array[(Long, Long, Long, Double)]) =
-        a.grouped(math.max(1, math.ceil(a.length / 3.0).toInt))
-          .map(_.toSeq).toSeq
-      chunks(errs).zipAll(chunks(clicks), Seq.empty, Seq.empty).foreach {
-        case (eb, cb) =>
-          if (System.nanoTime() > deadline)
-            throw new RuntimeException(s"$tag stream exceeded its 120s deadline")
-          if (eb.nonEmpty) memE.addData(eb: _*)
-          if (cb.nonEmpty) memC.addData(cb: _*)
-          q.processAllAvailable()
-      }
-      if (sentinels) {
-        val dayNs = 86400000000000L
-        val maxT = (errs ++ clicks).map(_._3).max
-        Seq(maxT + 2 * dayNs, maxT + 4 * dayNs).foreach { t =>
-          memE.addData((-1L, -1L, t, 0.0)); memC.addData((-1L, -1L, t, 0.0))
-          q.processAllAvailable()
-        }
-      }
-    } finally q.stop()
+    StreamingOps.drive(q, tag)(
+      chunks(errs).zipAll(chunks(clicks), Seq.empty, Seq.empty) ++ sentinelPairs) {
+      case (eb, cb) =>
+        if (eb.nonEmpty) memE.addData(eb: _*)
+        if (cb.nonEmpty) memC.addData(cb: _*)
+    }
     s.table(sink)
       .filter(col("e_user_id") =!= -1L)
       .groupBy(col("e_event_id").as("event_id"),

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.streaming.StreamingOps
 import graft.text.Pipeline
 
 /** Corpus-preparation pipeline queries (SURVEY §2.8 north-star): benchmark
@@ -1195,17 +1196,11 @@ object PipelineQueries {
               InvertedIndex.appendToIndex(batch, "doc_id", "text", path)
             (): Unit
           }
-          .option("checkpointLocation",
-            s"${Scratch.dir}/x153_ckpt_${System.nanoTime()}")
+          .option("checkpointLocation", StreamingOps.checkpointDir("x153"))
           .start()
-        try {
-          val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-          Seq(0L, 1L, 2L).map(m => docs.filter(_._1 % 3 == m)).foreach { b =>
-            if (System.nanoTime() > deadline)
-              throw new RuntimeException("x153 stream exceeded its 120s deadline")
-            mem.addData(b.toIndexedSeq: _*); q.processAllAvailable()
-          }
-        } finally q.stop()
+        StreamingOps.drive(q, "x153")(
+          Seq(0L, 1L, 2L).map(m => docs.filter(_._1 % 3 == m)))(
+          b => mem.addData(b.toIndexedSeq: _*))
         invIdxCompactPruneScore(s, path)
       },
       Some(Bm25IndexReplaySql)),
@@ -2349,18 +2344,11 @@ object PipelineQueries {
               r.getDouble(2), r.getDouble(2) <= gate))
             (): Unit
           }
-          .option("checkpointLocation",
-            s"${Scratch.dir}/x72_ckpt_${System.nanoTime()}")
+          .option("checkpointLocation", StreamingOps.checkpointDir("x72"))
           .start()
-        try {
-          val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-          Seq(1L, 2L, 3L).foreach { b =>
-            if (System.nanoTime() > deadline)
-              throw new RuntimeException("x72 stream exceeded its 120s deadline")
-            mem.addData(docs.filter(_._1 % 4 == b).toIndexedSeq: _*)
-            q.processAllAvailable()
-          }
-        } finally { q.stop(); baseline.unpersist(blocking = false) }
+        try StreamingOps.drive(q, "x72")(Seq(1L, 2L, 3L))(
+          b => mem.addData(docs.filter(_._1 % 4 == b).toIndexedSeq: _*))
+        finally baseline.unpersist(blocking = false)
         stats.toSeq.toDF("batch", "n_tokens", "n_novel_words", "kl", "accepted")
       },
       Some {

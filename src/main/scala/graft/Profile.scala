@@ -1,9 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
 
 /** Dev measurement tool (guide §1): run named queries under the Bench
   * session config and print a per-Spark-job time/shuffle breakdown, so a
@@ -11,7 +9,7 @@ import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
   * individual jobs (ingest wave N, append write, meta read, …) instead of
   * being one opaque number. Usage:
   *
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.Profile <sfDir> <query> [query…]"
+  *   SPARK_GRAFT_CPUS=4 sbt "runMain graft.Profile <sfDir> <query> [query…]"
   *
   * Prints, per job: duration, task count, shuffle read/write bytes and the
   * first 60 chars of the job's callSite/description. Gaps between jobs
@@ -29,18 +27,8 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.maxFields", 256)
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Scratch.sub("spark"))
-      .config("spark.sql.warehouse.dir", Scratch.sub("warehouse_default"))
-      .getOrCreate()
+    val spark = Session.local(Session.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    Session.install(spark)
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRow]()
     val order = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
@@ -78,11 +66,8 @@ object Profile {
       val fn = SparkEntry.queries(n)
       // warm once (JIT/codegen parity with Bench's in-registry position)
       if (sys.env.get("SPARK_GRAFT_PROFILE_WARM").contains("1")) {
-        try {
-          val df = fn(spark, sfDir)
-          df.select(xxhash64(struct(df.columns.map(col): _*)).as("__h"))
-            .agg(expr("bit_xor(__h)")).collect()
-        } catch { case e: Throwable => println(s"warm failed: $e") }
+        try Bench.hashReduce(fn(spark, sfDir)).collect()
+        catch { case e: Throwable => println(s"warm failed: $e") }
       }
       jobs.clear(); order.clear(); stageToJob.clear()
       spark.sparkContext.addSparkListener(listener)
@@ -90,8 +75,7 @@ object Profile {
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val tPlan = System.nanoTime()
-      df.select(xxhash64(struct(df.columns.map(col): _*)).as("__h"))
-        .agg(expr("bit_xor(__h)")).collect()
+      Bench.hashReduce(df).collect()
       val t1 = System.nanoTime()
       spark.sparkContext.removeSparkListener(listener)
       Thread.sleep(200) // let straggler listener events drain

@@ -8,6 +8,7 @@ import graft.text.TextOps
 import graft.forecast.Forecast
 import graft.ml.Knn
 import graft.similarity.Ann
+import graft.streaming.StreamingOps
 
 /** Named query registry binding every implemented operator to the driver
   * tables (TESTDATA.md), with a DuckDB-equivalent oracle SQL wherever the
@@ -1211,17 +1212,10 @@ object Queries {
               batch, "embedding", "vec_id", path)
             (): Unit
           }
-          .option("checkpointLocation",
-            s"${Scratch.dir}/x123_ckpt_${System.nanoTime()}")
+          .option("checkpointLocation", StreamingOps.checkpointDir("x123"))
           .start()
-        try {
-          val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-          Seq(1L, 2L).map(m => rest.filter(_._1 % 3 == m)).foreach { b =>
-            if (System.nanoTime() > deadline)
-              throw new RuntimeException("x123 stream exceeded its 120s deadline")
-            mem.addData(b.toIndexedSeq: _*); q.processAllAvailable()
-          }
-        } finally q.stop()
+        StreamingOps.drive(q, "x123")(Seq(1L, 2L).map(m => rest.filter(_._1 % 3 == m)))(
+          b => mem.addData(b.toIndexedSeq: _*))
         x123Graph = Some(s.read.parquet(s"$path/nodes")
           .select(col("id").cast("long"), col("__shard").cast("int"),
             col("level").cast("int"), col("layers").cast("array<array<bigint>>"))

@@ -4,11 +4,18 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.internal.StaticSQLConf
 
-/** The per-session set-up every main, dev tool and test session runs
-  * right after `getOrCreate`, and [[Watchdog.run]] again before each
-  * query (it is idempotent and cheap).
+/** The one local session every main, dev tool and test builds, and the
+  * per-session set-up it runs.
   *
-  * It installs the fork-free `file:` filesystem
+  * [[local]] is the only session builder in `src/`: `Bench`, `Verify`,
+  * `Profile`, `Explain` and the test trait `SparkSpec` all call it, so a
+  * plan, a timing or a test result is taken under one configuration.
+  * It calls [[install]] itself. [[Watchdog.run]] calls [[install]] again
+  * before each query (it is idempotent and cheap): that is what sets up a
+  * session a caller built itself, such as the layer-attributed
+  * benchmark's harness.
+  *
+  * [[install]] puts on the fork-free `file:` filesystem
   * ([[graft.sources.LocalFs.install]]) and sizes Spark's codegen cache.
   *
   * Codegen cache: every whole-stage-codegen'd operator compiles Java
@@ -43,6 +50,39 @@ object Session {
 
   /** Janino compiles in this JVM so far. */
   def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** `SPARK_GRAFT_CPUS`: the mains' local core count, 4 when unset. */
+  lazy val cpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption).getOrElse(4)
+
+  /** `SPARK_GRAFT_ONLY=q1,q2`: the query names a main runs, all when unset. */
+  lazy val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
+    .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+
+  /** `local[cpus]` with `cpus` shuffle partitions, UTC,
+    * `codegen.maxFields=256`, the UI off and Spark's scratch on
+    * [[Scratch]], then [[install]]ed.
+    */
+  def local(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      // 128-wide minhash aggregates must stay inside whole-stage codegen
+      .config("spark.sql.codegen.maxFields", 256)
+      .config("spark.ui.enabled", "false")
+      // shuffle/spill/state scratch on RAM-backed tmpfs when available —
+      // the host's boot disk is routinely IO-throttled by co-tenants (see
+      // Scratch's header); MB-scale shuffles and state commits must not
+      // pay for it
+      .config("spark.local.dir", Scratch.sub("spark"))
+      // catalog-managed tables (Bucketed) land on scratch, not in the cwd
+      .config("spark.sql.warehouse.dir", Scratch.sub("warehouse_default"))
+      .getOrCreate()
+    // before the first query plans: the codegen cache is sized only once
+    install(spark)
+    spark
+  }
 
   def install(spark: SparkSession): Unit = synchronized {
     graft.sources.LocalFs.install(spark)

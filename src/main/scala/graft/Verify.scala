@@ -1,34 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // 128-wide minhash aggregates must stay inside whole-stage codegen
-      .config("spark.sql.codegen.maxFields", 256)
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill scratch on RAM-backed tmpfs when available (see
-      // Scratch's header — the boot disk is routinely IO-throttled)
-      .config("spark.local.dir", Scratch.sub("spark"))
-      // catalog-managed tables (Bucketed) land on scratch, not in the repo cwd
-      .config("spark.sql.warehouse.dir", Scratch.sub("warehouse_default"))
-      .getOrCreate()
-    // before the first query plans: the codegen cache is sized only once
-    Session.install(spark)
+    val spark = Session.local(Session.cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // local-iteration filter: SPARK_GRAFT_ONLY=q1,q2 runs a subset (the
     // driver never sets it, so the contract run always dumps everything)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def selected(name: String) = only.forall(_.contains(name))
+    def selected(name: String) = Session.only.forall(_.contains(name))
     SparkEntry.queries.foreach { case (name, fn) =>
       if (selected(name)) {
         System.err.println(s"[verify] ${java.time.Instant.now()} running $name")

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming execution mode for the keyed recurrence operators
   * (SURVEY §2.9). The reference has no streaming runtime — its observers
@@ -78,6 +78,33 @@ object StreamingOps {
       s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
     }
   }
+
+  /** Drive a started query through `steps`, the micro-batch loop of every
+    * MemoryStream harness in this repo: for each step, check the deadline,
+    * `feed` the step to the query's source(s) and wait until the query
+    * has processed everything fed so far. The query is stopped on the way
+    * out, whether the loop ends, times out or `feed` throws.
+    *
+    * The deadline stops THIS stream: `graft.Watchdog` can cancel batch
+    * jobs, but not a streaming query's execution thread.
+    */
+  def drive[B](q: StreamingQuery, tag: String, deadlineSec: Int = 120)(
+      steps: Iterable[B])(feed: B => Unit): Unit = {
+    val deadline = System.nanoTime() + deadlineSec * 1000000000L
+    try steps.foreach { step =>
+      if (System.nanoTime() >= deadline)
+        throw new RuntimeException(s"$tag stream exceeded its ${deadlineSec}s deadline")
+      feed(step)
+      q.processAllAvailable()
+    } finally q.stop()
+  }
+
+  /** A fresh checkpoint directory for one run of harness `tag`, on
+    * RAM-backed scratch: state commits on a throttled disk stall the
+    * micro-batches.
+    */
+  def checkpointDir(tag: String): String =
+    s"${graft.Scratch.dir}/${tag}_ckpt_${System.nanoTime()}"
 
   /** Long-format streaming sample: one point of one series. */
   case class SeriesPoint(series_id: String, t: Long, value: Double)

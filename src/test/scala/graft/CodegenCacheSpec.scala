@@ -3,7 +3,6 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
 import org.apache.spark.sql.internal.StaticSQLConf
 
 /** [[Session.install]] sizes Spark's JVM-wide codegen cache so that a
@@ -20,9 +19,7 @@ class CodegenCacheSpec extends SparkSpec {
     def runMix(): Long = {
       val before = Session.compiles
       for (q <- mix) Watchdog.run(spark, q) {
-        val df = SparkEntry.queries(q)(spark, dir)
-        df.select(xxhash64(struct(df.columns.map(col): _*)).as("__h"))
-          .agg(expr("bit_xor(__h)")).collect()
+        Bench.hashReduce(SparkEntry.queries(q)(spark, dir)).collect()
       }
       Session.compiles - before
     }

@@ -5,24 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession + long-format fixture helpers. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill/state scratch on RAM-backed tmpfs when available —
-      // the host disk is routinely IO-throttled by co-tenants, which turns
-      // streaming state-store commits in the specs into multi-second ops
-      .config("spark.local.dir", Scratch.sub("spark-test"))
-      // catalog-managed tables (Bucketed) land on scratch, not the repo cwd
-      .config("spark.sql.warehouse.dir", Scratch.sub("warehouse_test"))
-      .getOrCreate()
-    // before the first query plans: the codegen cache is sized only once
-    Session.install(s)
-    s
-  }
+  /** `local[4]` whatever `SPARK_GRAFT_CPUS` says, under the mains' config. */
+  lazy val spark: SparkSession = Session.local(4)
 
   /** Fresh RAM-backed checkpoint dir for one streaming query. A session-
     * global `spark.sql.streaming.checkpointLocation` keys checkpoints by

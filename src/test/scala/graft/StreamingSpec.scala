@@ -322,4 +322,41 @@ class StreamingSpec extends SparkSpec {
         s"horizon semantics violated: $got")
     } finally q.stop()
   }
+
+  /** A memory-sink query over a fresh `MemoryStream[Long]`, for [[StreamingOps.drive]]. */
+  private def longSink(name: String) = {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = MemoryStream[Long]
+    val q = mem.toDF().writeStream.format("memory").queryName(name)
+      .option("checkpointLocation", freshCkpt()).outputMode("append").start()
+    (mem, q)
+  }
+
+  test("drive throws once its deadline has passed, and stops the query") {
+    val (mem, q) = longSink("drive_deadline")
+    try {
+      val e = intercept[RuntimeException] {
+        StreamingOps.drive(q, "t0", deadlineSec = 0)(Seq(1L))(mem.addData(_))
+      }
+      assert(e.getMessage == "t0 stream exceeded its 0s deadline")
+      assert(!q.isActive && spark.streams.active.isEmpty)
+      assert(spark.table("drive_deadline").count() == 0, "a step was fed after the deadline")
+    } finally spark.sql("DROP TABLE IF EXISTS drive_deadline")
+  }
+
+  test("drive processes each step before the next, propagates a failing feed, and stops the query") {
+    val (mem, q) = longSink("drive_feed")
+    try {
+      val e = intercept[IllegalStateException] {
+        StreamingOps.drive(q, "t1")(Seq(1L, 2L, 3L)) { b =>
+          if (b == 3L) throw new IllegalStateException("feed failed")
+          mem.addData(b)
+        }
+      }
+      assert(e.getMessage == "feed failed")
+      assert(!q.isActive && spark.streams.active.isEmpty)
+      assert(spark.table("drive_feed").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
+    } finally spark.sql("DROP TABLE IF EXISTS drive_feed")
+  }
 }
