@@ -1526,7 +1526,7 @@ object DedupQueries {
         val feeds = Seq(0L, 1L, 2L).map(m => docs.filter(_._1 % 3 == m)) :+
           docs.filter(_._1 % 3 == 2) // re-ingest of batch 2
         StreamingOps.drive(q, "x45")(feeds)(b => mem.addData(b.toIndexedSeq: _*))
-        val indexRows = s.read.parquet(s"$path/hashes").count()
+        val indexRows = Partitioned.footerRowCount(s, s"$path/hashes")
         (stats.toSeq :+ (99L, indexRows, 0L))
           .toDF("step", "n", "id_sum")
       },
@@ -1602,7 +1602,7 @@ object DedupQueries {
           s"compaction did not collapse the file count: $before -> $after")
         val s2 = stat(batch(2L, 4))
         val s3 = stat(batch(2L, 4)) // re-ingest: idempotence survives compaction
-        val idxRows = s.read.parquet(s"$path/hashes").count()
+        val idxRows = Partitioned.footerRowCount(s, s"$path/hashes")
         Seq((0L, s0._1, s0._2), (1L, s1._1, s1._2), (2L, s2._1, s2._2),
           (3L, s3._1, s3._2), (99L, idxRows, 0L))
           .toDF("step", "n_survivors", "id_sum")
@@ -1672,7 +1672,7 @@ object DedupQueries {
         val removed = IncrementalDedup.deleteFromIndex(
           s, path, docs.filter(col("doc_id") % 15 === 0), "text", nBuckets = 8)
         val s3 = stat(batch(0L)) // re-ingest: deleted hash groups readmit
-        val idxRows = s.read.parquet(s"$path/hashes").count()
+        val idxRows = Partitioned.footerRowCount(s, s"$path/hashes")
         Seq((0L, s0._1, s0._2), (1L, s1._1, s1._2), (2L, removed, 0L),
           (3L, s3._1, s3._2), (99L, idxRows, 0L))
           .toDF("step", "n", "id_sum")
@@ -2335,7 +2335,7 @@ object DedupQueries {
           df.agg(count(lit(1)).as("n_survivors"),
             coalesce(sum(col("vec_id")), lit(0L)).as("id_sum"))
             .select(lit(b).as("batch"), col("n_survivors"), col("id_sum"))
-        val idxRows = s.read.parquet(s"$path/state").count()
+        val idxRows = Partitioned.footerRowCount(s, s"$path/state")
         stats(b1, 1L).unionAll(stats(b2, 2L)).unionAll(
           s.range(1).select(lit(99L).as("batch"),
             lit(idxRows).as("n_survivors"), lit(0L).as("id_sum")))
@@ -2482,7 +2482,7 @@ object DedupQueries {
         StreamingOps.drive(q, "x126", deadlineSec = 180)(feeds)(
           b => mem.addData(b.toIndexedSeq: _*))
         x126Cents = Some(IncrementalSemDedup.centroids(s, path))
-        val idxRows = s.read.parquet(s"$path/state").count()
+        val idxRows = Partitioned.footerRowCount(s, s"$path/state")
         (stats.toSeq :+ (99L, idxRows, 0L))
           .toDF("step", "n_survivors", "id_sum")
       },

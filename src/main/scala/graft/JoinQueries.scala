@@ -619,20 +619,13 @@ object JoinQueries {
           Snapshots.activeFiles(s, path, 1),
           "restore must republish v1's manifest file-for-file")
         import s.implicits._
-        def stats(v: Int) = {
-          val r = Snapshots.read(s, path, Some(v)).agg(
-            count(lit(1)), coalesce(sum(col("doc_id")), lit(0L)),
-            coalesce(sum(conv(substring(md5(col("text")), 1, 8), 16, 10)
-              .cast("long")), lit(0L))).head()
-          (v.toLong, r.getLong(0), r.getLong(1), r.getLong(2))
-        }
-        val out = (1 to 4).map(stats)
+        val out = docStats(s, path, 1 to 4)
         // retention GC: keep v3+v4, drop the older manifests and every
         // unreferenced data file — the restored version must keep its
         // ancestor's files alive through its own manifest
         val (dropped, _) = Snapshots.vacuum(s, path, keepLast = 2)
         require(dropped == 2, s"vacuum dropped $dropped manifests")
-        require(stats(3) == out(2) && stats(4) == out(3),
+        require(docStats(s, path, Seq(3, 4)) == out.drop(2),
           "kept versions changed under vacuum")
         out.toDF("version", "n_docs", "id_sum", "text_crc_sum")
       },
@@ -727,12 +720,10 @@ object JoinQueries {
         val filesAfter = Snapshots.activeFiles(s, path, v5).length
         require(filesAfter < filesBefore,
           s"OPTIMIZE must collapse the stream's files: $filesBefore -> $filesAfter")
-        def stats(v: Int) = {
-          val r = Snapshots.read(s, path, Some(v)).agg(
-            count(lit(1)), coalesce(sum(col("doc_id")), lit(0L))).head()
-          (v.toLong, r.getLong(0), r.getLong(1))
-        }
-        val out = (1 to 5).map(stats)
+        val out = Snapshots.versionStats(s, path, 1 to 5)(_ => Seq(
+            count(lit(1)), coalesce(sum(col("doc_id")), lit(0L))))
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+          .sortBy(_._1).toSeq
         // compaction is invisible in the data and history stays stable
         require(out(4)._2 == out(3)._2 && out(4)._3 == out(3)._3,
           "compacted version diverged from the erased one")
@@ -896,7 +887,6 @@ object JoinQueries {
     QueryDef(
       "x151_snapshot_schema_evolution",
       (s, dir) => {
-        import s.implicits._
         import graft.sources.Snapshots
         val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
         val path = s"${Scratch.dir}/graft_snap_evolve_$tag"
@@ -925,18 +915,14 @@ object JoinQueries {
         val v3 = Snapshots.rollback(s, path, 1)
         require(Snapshots.read(s, path, Some(v3)).schema.fieldNames.toSeq ==
           Seq("doc_id", "text"), "restore must republish v1's schema")
-        def stats(v: Int) = {
-          val df = Snapshots.read(s, path, Some(v))
+        Snapshots.versionStats(s, path, Seq(1, 2, 3)) { df =>
           val langCnt =
             if (df.columns.contains("lang"))
               count(when(col("lang").isNotNull, lit(1)))
             else lit(0L)
-          val r = df.agg(count(lit(1)), langCnt.cast("long"),
-            coalesce(sum(col("doc_id")), lit(0L))).head()
-          (v.toLong, r.getLong(0), r.getLong(1), r.getLong(2))
+          Seq(count(lit(1)).as("n_docs"), langCnt.cast("long").as("n_lang"),
+            coalesce(sum(col("doc_id")), lit(0L)).as("id_sum"))
         }
-        Seq(stats(1), stats(2), stats(3))
-          .toDF("version", "n_docs", "n_lang", "id_sum")
       },
       Some("""
         WITH v1 AS (
@@ -1021,9 +1007,13 @@ object JoinQueries {
               .write.mode("overwrite").partitionBy("event_type").parquet(path)
           }
         } finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        val (n, n0) = (s.read.parquet(path).count(), ev.count())
+        // both counts from parquet footers: the table just written, and
+        // the source table `ev` projects without a filter
+        val (n, n0) = (graft.sources.Partitioned.footerRowCount(s, path),
+          Tables.rowCount(s, dir, "events"))
         require(n == n0, s"retry duplicated or truncated rows: $n0 -> $n")
-        s.read.parquet(path)
+        // `ev`'s schema, given: inferring it from a footer is a Spark job
+        s.read.schema(ev.schema).parquet(path)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n_events"),
             round(sum(col("value")), 6).as("sum_value"),
@@ -1223,18 +1213,11 @@ object JoinQueries {
         require(Snapshots.activeDvFiles(s, path, v4).isEmpty,
           "OPTIMIZE must materialize deletion vectors away")
         import s.implicits._
-        def stats(v: Int) = {
-          val r = Snapshots.read(s, path, Some(v)).agg(
-            count(lit(1)), coalesce(sum(col("doc_id")), lit(0L)),
-            coalesce(sum(conv(substring(md5(col("text")), 1, 8), 16, 10)
-              .cast("long")), lit(0L))).head()
-          (v.toLong, r.getLong(0), r.getLong(1), r.getLong(2))
-        }
-        val out = (1 to 4).map(stats)
+        val out = docStats(s, path, 1 to 4)
         // retention: v3 (DV-carrying) + v4 kept — the sidecars survive
         // vacuum while any kept version references them
         Snapshots.vacuum(s, path, keepLast = 2)
-        require(stats(3) == out(2) && stats(4) == out(3),
+        require(docStats(s, path, Seq(3, 4)) == out.drop(2),
           "kept versions changed under vacuum")
         out.toDF("version", "n_docs", "id_sum", "text_crc_sum")
       },
@@ -1529,6 +1512,19 @@ object JoinQueries {
           SELECT 'lo' AS side, sv FROM a WHERE sv <= 0)
         GROUP BY 1
       """.stripMargin.trim)))
+
+  /** `(version, n_docs, id_sum, text_crc_sum)` of each of `versions` of
+    * the snapshot table at `path`, in version order, from one action.
+    */
+  private def docStats(
+      s: org.apache.spark.sql.SparkSession, path: String,
+      versions: Seq[Int]): Seq[(Long, Long, Long, Long)] =
+    graft.sources.Snapshots.versionStats(s, path, versions)(_ => Seq(
+        count(lit(1)), coalesce(sum(col("doc_id")), lit(0L)),
+        coalesce(sum(conv(substring(md5(col("text")), 1, 8), 16, 10)
+          .cast("long")), lit(0L))))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .sortBy(_._1).toSeq
 
   /** Execute `df`'s own QueryExecution and return the FINAL adaptive
     * plan as text — the only view that shows runtime re-plans (skew

@@ -1556,7 +1556,7 @@ object PipelineQueries {
       (s, dir) => {
         import graft.operators.LinkRank
         val docs = Tables.documents(s, dir).select(col("doc_id"))
-        val n = docs.count()
+        val n = Tables.rowCount(s, dir, "documents")
         val edges = docs
           .select(col("doc_id").as("src"),
             explode(array((1 to 3).map(j =>

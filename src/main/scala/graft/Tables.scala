@@ -52,9 +52,17 @@ object Tables {
     catch { case _: Exception => }
     val app = spark.sparkContext.applicationId
     loadCache.keySet.removeIf(_._1 != app)
-    loadCache.computeIfAbsent((app, s"$dir/$name.parquet"),
+    loadCache.computeIfAbsent((app, file(dir, name)),
       k => spark.read.parquet(k._2))
   }
+
+  private def file(dir: String, name: String) = s"$dir/$name.parquet"
+
+  /** Row count of table `name`, read from its parquet footers: no Spark
+    * job, so a proof that needs a source table's size costs nothing.
+    */
+  def rowCount(spark: SparkSession, dir: String, name: String): Long =
+    graft.sources.Partitioned.footerRowCount(spark, file(dir, name))
 
   def region(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "nation")

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Pre-shuffle skew diagnostics — the measurement step before reaching
@@ -12,9 +11,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one count aggregate on the key (the same shuffle the
   * diagnosed join would do, but carrying only (key, count) rows), a
-  * single-row population summary off the count frame, and a rank window
-  * for the heavy-hitter list (WindowGroupLimit: each map task forwards
-  * only its local top-k candidate counts).
+  * single-row population summary off the count frame, and a distributed
+  * top-k for the heavy-hitter list (each map task forwards only its local
+  * top-k candidate counts; only the k winners are numbered, in one task).
   */
 object Diagnostics {
 
@@ -35,11 +34,19 @@ object Diagnostics {
       count(lit(1)).as("n_keys"),
       sum(col("n_rows")).as("__total"),
       avg(col("n_rows")).as("mean_rows_per_key"))
-    val w = Window.orderBy(
-      col("n_rows").desc +: keyCols.map(c => col(c).asc): _*)
-    counts
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    // distributed top-k (each task keeps its own k best), then number
+    // only those k rows: sorted as structs led by -n_rows, in the same
+    // (n_rows desc, keys asc nulls first) order as the ranking
+    val top = counts
+      .orderBy(col("n_rows").desc +: keyCols.map(c => col(c).asc): _*)
+      .limit(k)
+      .agg(sort_array(collect_list(struct(
+        (-col("n_rows")).as("__o") +: keyCols.map(col) :+ col("n_rows"): _*)))
+        .as("__top"))
+      .select(posexplode(col("__top")).as(Seq("__pos", "__e")))
+      .select((col("__pos") + 1).as("rank") +:
+        (keyCols :+ "n_rows").map(c => col("__e").getField(c).as(c)): _*)
+    top
       .crossJoin(broadcast(pop))
       .select(col("rank") +: keyCols.map(col) :+
         col("n_rows") :+

@@ -270,17 +270,12 @@ object IncrementalSemDedup {
         }
       }
       .toDF("__id")
-    // cache for the duration of the append only (the IncrementalDedup
-    // lifetime contract), then release
-    val survivors = assigned
-      .join(survivorIds, Seq("__id"), "left_semi").cache()
-    try {
-      survivors
-        .select(col("__id"), col("__vec"), col("__c"),
-          col("__c").as("__cell"))
-        .repartition(math.max(touched.size, 1), col("__cell"))
-        .write.mode("append").partitionBy("__cell").parquet(statePath(path))
-    } finally survivors.unpersist(blocking = false)
+    // the append is the survivors' only consumer (the return path reads
+    // the appended files back), so they are not cached
+    assigned.join(survivorIds, Seq("__id"), "left_semi")
+      .select(col("__id"), col("__vec"), col("__c"), col("__c").as("__cell"))
+      .repartition(math.max(touched.size, 1), col("__cell"))
+      .write.mode("append").partitionBy("__cell").parquet(statePath(path))
     // read-back return path: the survivors ARE what the append just
     // persisted (pre-append snapshot diff) — consumers re-run an
     // O(batch) semi-join, never the greedy chain

@@ -41,6 +41,11 @@ import org.apache.spark.sql.functions._
   * name/type conflict fails loudly before anything is written), and a
   * restore republishes the restored version's schema.
   *
+  * [[versionStats]] answers a per-version statistic for many versions
+  * with one frame: each version's aggregates over its own pinned schema,
+  * unioned under a `version` column, so one action (or none, when the
+  * frame is returned) covers every version instead of one job each.
+  *
   * Each commit also records its new files' numeric column ranges (zone
   * maps from the parquet footers it just wrote, stored beside the files
   * as `_stats.json`) so [[readRange]] opens only the files a range
@@ -129,6 +134,25 @@ object Snapshots {
     applyDv(
       readFiles(spark, path, rels, readSchema(spark, path, v), s"version $v"),
       dvFrameOpt(spark, path, activeDvFiles(spark, path, v)), rels.nonEmpty)
+  }
+
+  /** Per-version statistics as ONE frame: `aggs` applied to each of
+    * `versions`' [[read]], one row per version behind a leading BIGINT
+    * `version` column, unioned by position, so one action over the
+    * result answers every version instead of one job per version.
+    * `aggs` sees the version's own pinned schema, so it can branch on a
+    * column a widening append added, but must give the same column
+    * types for every version. An empty version yields its aggregates
+    * over no rows (`count` 0, `sum` null).
+    */
+  def versionStats(spark: SparkSession, path: String, versions: Seq[Int])(
+      aggs: DataFrame => Seq[Column]): DataFrame = {
+    require(versions.nonEmpty, s"versionStats needs at least one version at $path")
+    versions.map { v =>
+      val df = read(spark, path, Some(v))
+      val cols = aggs(df)
+      df.agg(cols.head, cols.tail: _*).select(lit(v.toLong).as("version"), col("*"))
+    }.reduce(_.unionAll(_))
   }
 
   /** Schema of version `v`, from the `_schema.json` persisted beside its
@@ -942,19 +966,8 @@ object Snapshots {
     * reads only, O(files) driver-side, never a data scan.
     */
   private def footerRowCount(
-      spark: SparkSession, path: String, rels: Seq[String]): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    rels.map { rel =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"$path/$rel"), conf))
-      try {
-        var n = 0L
-        reader.getFooter.getBlocks.forEach { b => n += b.getRowCount }
-        n
-      } finally reader.close()
-    }.sum
-  }
+      spark: SparkSession, path: String, rels: Seq[String]): Long =
+    Partitioned.footerRowCountFiles(spark, rels.map(rel => s"$path/$rel"))
 
   /** File-pruned CHANGE FEED between two committed versions — the Delta
     * CDF / `table_changes` analogue on the commit log: the net row

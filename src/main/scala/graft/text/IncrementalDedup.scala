@@ -192,17 +192,13 @@ object IncrementalDedup {
           spark.read.schema(hashSchema).parquet(snapshot: _*).select(col("__h")),
           Seq("__h"), "left_anti")
       else withinBatch
-    // Cache only for the duration of the index append, then RELEASE: the
-    // intended caller is a long-running foreachBatch ingest loop, and a
-    // cache left pinned here would accumulate one batch of storage per
-    // micro-batch for the life of the stream.
-    val survivors = fresh.cache()
-    try {
-      survivors.select(col("__h"))
-        .withColumn("__b", pmod(crc32(col("__h")), lit(nBuckets)))
-        .repartition(nBuckets, col("__b"))
-        .write.mode("append").partitionBy("__b").parquet(hashesPath(path))
-    } finally survivors.unpersist(blocking = false)
+    // The index append is the only consumer of `fresh` (the return path
+    // below reads the appended files back), so it is not cached: a cache
+    // would cost a job to fill and driver state to track, with no reuse.
+    fresh.select(col("__h"))
+      .withColumn("__b", pmod(crc32(col("__h")), lit(nBuckets)))
+      .repartition(nBuckets, col("__b"))
+      .write.mode("append").partitionBy("__b").parquet(hashesPath(path))
     // The survivors ARE what the append just persisted — semi-join the
     // within-batch winners against the hashes read back from the newly
     // added files (pre-append snapshot diff; the IncrementalNearDup r10

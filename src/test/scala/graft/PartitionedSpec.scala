@@ -27,6 +27,34 @@ class PartitionedSpec extends SparkSpec {
     assert(Partitioned.prunedPartitionCount(rowFiltered) == -1)
   }
 
+  test("footerRowCount equals count() after a dynamic overwrite and a duplicating append") {
+    import spark.implicits._
+    // x90's layout: events partitioned by type, the click slice rewritten
+    // twice under dynamic partition overwrite
+    val ev = (0L until 300L)
+      .map(i => (i, Seq("click", "view", "buy")((i % 3).toInt), i * 0.5))
+      .toDF("event_id", "event_type", "value")
+    val path = s"${Scratch.sub("partspec")}/footer-${java.util.UUID.randomUUID()}"
+    def write(df: org.apache.spark.sql.DataFrame, mode: String): Unit =
+      df.repartition(col("event_type"))
+        .write.mode(mode).partitionBy("event_type").parquet(path)
+    write(ev, "overwrite")
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.get(mode)
+    try {
+      spark.conf.set(mode, "dynamic")
+      (1 to 2).foreach(_ => write(ev.filter(col("event_type") === "click"), "overwrite"))
+    } finally spark.conf.set(mode, prev)
+    assert(Partitioned.footerRowCount(spark, path) == spark.read.parquet(path).count())
+    assert(Partitioned.footerRowCount(spark, path) == 300L)
+    // a plain append duplicates the partition: the footer count must see
+    // the extra rows, or x90's retry check could not catch a double write
+    write(ev.filter(col("event_type") === "click"), "append")
+    val n = spark.read.parquet(path).count()
+    assert(n == 400L)
+    assert(Partitioned.footerRowCount(spark, path) == n)
+  }
+
   test("compact collapses the file count and preserves every row") {
     import spark.implicits._
     val df = (1 to 300).map(i => (i.toLong, s"k${i % 3}", i * 1.0)).toDF("id", "k", "v")

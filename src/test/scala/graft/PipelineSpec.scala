@@ -401,6 +401,38 @@ class PipelineSpec extends SparkSpec {
     assert(out(2).getAs[String]("key") == "c" && out(2).getAs[Int]("rank") == 3)
   }
 
+  test("skewReport: distributed top-k equals the row_number ranking under tied counts") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    import graft.operators.Diagnostics
+    // two key columns, a null key, and runs of equal counts that straddle
+    // the k cut-off: only the key order decides who is kept
+    val keys = Seq[(String, Integer, Int)](("b", 1, 4), ("a", 2, 4), ("a", 1, 4),
+      (null, 7, 4), ("c", null, 2), ("c", 3, 2), ("d", 0, 2), ("e", 5, 1),
+      ("a", 9, 1), (null, null, 1))
+    val df = keys.flatMap { case (k1, k2, n) => Seq.fill(n)((k1, k2)) }
+      .toDF("k1", "k2")
+    val cols = Seq("k1", "k2")
+    // the form this replaced: one unpartitioned window over every key
+    def windowed(k: Int) = {
+      val counts = df.groupBy(cols.map(col): _*).agg(count(lit(1)).as("n_rows"))
+      counts.withColumn("rank", row_number().over(Window.orderBy(
+          col("n_rows").desc +: cols.map(c => col(c).asc): _*)))
+        .filter(col("rank") <= k)
+        .select(col("rank"), col("k1"), col("k2"), col("n_rows"))
+    }
+    for (k <- Seq(1, 3, 5, 6, 10, 20)) {
+      val got = Diagnostics.skewReport(df, cols, k)
+        .select("rank", "k1", "k2", "n_rows").orderBy("rank").collect().toSeq
+      val want = windowed(k).orderBy("rank").collect().toSeq
+      assert(got == want, s"k=$k")
+    }
+    // no window operator is left to sort the key set in one task
+    assert(!Diagnostics.skewReport(df, cols, 3).queryExecution.executedPlan
+      .toString.contains("Window"))
+    assert(Diagnostics.skewReport(df.filter(lit(false)), cols, 3).isEmpty)
+  }
+
   test("hashSplit: disjoint exhaustive assignment, md5-replayable, stable proportions") {
     import spark.implicits._
     val df = (0L until 1000L).map(i => (i, s"d$i")).toDF("doc_id", "text")

@@ -327,6 +327,29 @@ class SnapshotsSpec extends SparkSpec {
     assert(ids(Snapshots.read(spark, path)) == Set(9L))
   }
 
+  test("versionStats equals one agg().head() per version, widening and empty versions included") {
+    import spark.implicits._
+    val path = freshPath("vstats")
+    Snapshots.append(Seq((1L, "a"), (2L, "b"), (5L, "c")).toDF("id", "tag"), path)
+    Snapshots.append(Seq((3L, "c", "en"), (4L, "d", null)).toDF("id", "tag", "lang"), path)
+    Snapshots.deleteWhere(spark, path, lit(true)) // v3: empty, widened schema
+    def aggs(df: org.apache.spark.sql.DataFrame) = Seq(
+      count(lit(1)), sum(col("id")),
+      (if (df.columns.contains("lang")) count(col("lang")) else lit(0L)).cast("long"),
+      max(col("tag")))
+    val versions = Seq(1, 2, 3)
+    val oneAction = Snapshots.versionStats(spark, path, versions)(aggs)
+    assert(oneAction.columns.head == "version")
+    val got = oneAction.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    val perVersion = versions.map { v =>
+      val df = Snapshots.read(spark, path, Some(v))
+      val a = aggs(df)
+      v.toLong +: df.agg(a.head, a.tail: _*).head().toSeq
+    }
+    assert(got == perVersion)
+    assert(got.map(_.take(3)) == Seq(Seq(1L, 3L, 8L), Seq(2L, 5L, 15L), Seq(3L, 0L, null)))
+  }
+
   test("zone maps tolerate non-finite values: commit succeeds, column never prunes") {
     import spark.implicits._
     val path = freshPath("nanstats")
