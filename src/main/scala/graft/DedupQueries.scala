@@ -963,8 +963,8 @@ object DedupQueries {
         IncrementalDedup.dropIndex(s, path)
         val docs = Tables.documents(s, dir)
         // nBuckets sized to the bench corpus (the x75 capacity-sizing
-        // note); the returned-frame consumption reads the appended files
-        // back, so oversized bucket counts also multiply read-back files
+        // note); each returned frame reads the survivors its append
+        // checkpointed, so the stats below re-run no election
         val s1 = IncrementalDedup.dedupIncremental(
           docs.filter(col("doc_id") % 2 === 0), "text", Seq("doc_id"), path,
           nBuckets = 8)
@@ -1571,10 +1571,7 @@ object DedupQueries {
     //    0/1, compacts (file-count collapse require()-checked in-query,
     //    the plan-proof style), ingests batch 2 against the compacted
     //    index, then re-ingests batch 2 (idempotence must survive
-    //    compaction). Batch stats are materialized BEFORE compaction —
-    //    the read-back return frames pin pre-compaction file lists that
-    //    the rewrite replaces (the documented consume-then-compact
-    //    contract). FULL oracle: the x45 three-batch anti-join cascade
+    //    compaction). FULL oracle: the x45 three-batch anti-join cascade
     //    — compaction is semantics-free, which is exactly what the
     //    shared shape proves ──
     QueryDef(

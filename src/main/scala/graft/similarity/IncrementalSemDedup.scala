@@ -163,11 +163,13 @@ object IncrementalSemDedup {
     // whole files are read, so the pre-image count is footer metadata
     val before = graft.sources.Partitioned.footerRowCountFiles(
       spark, touchedSnap)
-    // materialize survivors BEFORE dropping the directories they read
+    // materialize survivors BEFORE dropping the directories they read:
+    // the checkpoint is lazy and the count fills it, so every partition
+    // is pinned by one job before any directory goes
     val kept = resident.join(del.select(col("__id")), Seq("__id"), "left_anti")
       .withColumn("__cell", col("__c"))
       .repartition(col("__cell"))
-      .localCheckpoint(true)
+      .localCheckpoint(eager = false)
     val after = kept.count()
     val fs = new org.apache.hadoop.fs.Path(statePath(path))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

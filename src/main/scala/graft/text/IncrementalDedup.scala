@@ -9,13 +9,17 @@ import graft.sources.Partitioned
   * shape: a daily batch must dedup against the whole corpus WITHOUT
   * rescanning it. The corpus is represented by a persisted content-hash
   * index (md5 of [[TextOps.normalize]]d text — the same fingerprint as
-  * [[TextOps.exactDedup]]), and each batch runs
+  * [[TextOps.exactDedup]]), and each batch runs one pass
   *
-  *   within-batch dedup → anti-join vs index → append survivors' hashes,
+  *   anti-join vs index → bucket → within-batch election → append,
   *
   * so ingesting the same batch twice is a no-op the second time
   * (idempotent by construction: every survivor's hash lands in the index
-  * before the next batch reads it).
+  * before the next batch reads it). The anti-join removes whole hash
+  * groups, so running it before the election keeps exactly the rows the
+  * election-first order keeps, and only rows not yet in the index are
+  * shuffled. The append materializes the elected survivors once, and the
+  * returned frame reads them from that checkpoint.
   *
   * Index layout (`<path>/hashes/`): hash strings ONLY — no ids, no text —
   * partitioned into [[DefaultBuckets]] directories by a crc32 bucket of
@@ -25,7 +29,7 @@ import graft.sources.Partitioned
   * anti-join shuffles hash strings only, and the bucketed layout is the
   * on-disk shape a metastore-backed `bucketBy` table (or a per-bucket
   * map-side merge) needs to make the index side of that anti-join
-  * shuffle-free. Appends repartition by bucket first so a batch adds
+  * shuffle-free. The election's shuffle is by bucket, so a batch adds
   * O(1) files per touched bucket, not one per upstream task.
   *
   * Reference semantics: exact dedup per `fdi_flow` preprocessing
@@ -138,10 +142,12 @@ object IncrementalDedup {
     // whole files are read, so the pre-image count is footer metadata
     val before = graft.sources.Partitioned.footerRowCountFiles(
       spark, touchedFiles)
-    // materialize the survivors BEFORE dropping the directories they read
+    // materialize the survivors BEFORE dropping the directories they
+    // read: the checkpoint is lazy and the count fills it, so every
+    // partition is pinned by one job before any directory goes
     val kept = resident.join(del.select(col("__h")), Seq("__h"), "left_anti")
       .repartition(math.max(touched.size, 1), col("__b"))
-      .localCheckpoint(true)
+      .localCheckpoint(eager = false)
     val after = kept.count()
     val fs = new org.apache.hadoop.fs.Path(hashesPath(path))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -161,7 +167,19 @@ object IncrementalDedup {
     *
     * `keepBy` orders within-batch candidates (first wins), exactly as
     * [[TextOps.exactDedup]]; cross-batch, earlier batches always win
-    * (their hashes are already in the index).
+    * (their hashes are already in the index). A null text has a null
+    * hash: it never matches the index, so the row survives and its null
+    * hash is appended, as with every earlier batch.
+    *
+    * The returned frame reads a local checkpoint that the append filled,
+    * so consuming it runs no election, no index read and no scan of the
+    * batch's source, and it stays valid after [[compactIndex]] or
+    * [[deleteFromIndex]] rewrites the index files. The price: the
+    * checkpoint keeps every survivor row, with all batch columns, in the
+    * block manager (MEMORY_AND_DISK) until the frame is garbage-collected
+    * and Spark's `ContextCleaner` drops its blocks. A caller that keeps
+    * only some columns (e.g. ids) should project them and let the
+    * returned frame go.
     */
   def dedupIncremental(
       batch: DataFrame,
@@ -169,16 +187,14 @@ object IncrementalDedup {
       keepBy: Seq[String],
       path: String,
       nBuckets: Int = DefaultBuckets): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val spark = batch.sparkSession
-    val withinBatch = TextOps.exactDedup(batch, textCol, keepBy)
-      .withColumn("__h", TextOps.contentHash(col(textCol)))
+    val keyed = batch.withColumn("__h", TextOps.contentHash(col(textCol)))
     // Snapshot the index by listing its parquet files EXPLICITLY: the
-    // append below targets the same directory, which (a) invalidates any
-    // cache over a directory-scan plan (refreshByPath) and (b) would make
-    // a re-executed directory scan see the batch's own hashes — wrongly
-    // eliminating every survivor the caller consumes after the append.
-    // A pinned file list keeps every (re-)execution on the pre-append
-    // snapshot, whatever order the caller evaluates in.
+    // append below targets the same directory, and a re-executed
+    // directory scan would see the batch's own hashes — wrongly
+    // eliminating every survivor. A pinned file list keeps every
+    // (re-)execution on the pre-append snapshot.
     val snapshot = Partitioned.dataFiles(spark, hashesPath(path))
     // Snapshot reads carry an EXPLICIT schema (the IncrementalNearDup
     // device): with a plain file list Spark otherwise infers the schema
@@ -188,30 +204,24 @@ object IncrementalDedup {
     val fresh =
       if (snapshot.nonEmpty)
         // ids/text never enter this join's index side — hash strings only
-        withinBatch.join(
+        keyed.join(
           spark.read.schema(hashSchema).parquet(snapshot: _*).select(col("__h")),
           Seq("__h"), "left_anti")
-      else withinBatch
-    // The index append is the only consumer of `fresh` (the return path
-    // below reads the appended files back), so it is not cached: a cache
-    // would cost a job to fill and driver state to track, with no reuse.
-    fresh.select(col("__h"))
+      else keyed
+    // `__b` is a function of `__h`, so electing over (__b, __h) groups
+    // exactly as TextOps.exactDedup's hash window does, and the bucket
+    // shuffle already places each window group in one task.
+    val w = Window.partitionBy(col("__b"), col("__h")).orderBy(keepBy.map(col): _*)
+    val survivors = fresh
       .withColumn("__b", pmod(crc32(col("__h")), lit(nBuckets)))
       .repartition(nBuckets, col("__b"))
+      .withColumn("__rk", row_number().over(w))
+      .filter(col("__rk") === 1).drop("__rk")
+      .localCheckpoint(eager = false)
+    // The append is the job that fills the checkpoint; one task per
+    // bucket writes at most one file per touched bucket.
+    survivors.select(col("__h"), col("__b"))
       .write.mode("append").partitionBy("__b").parquet(hashesPath(path))
-    // The survivors ARE what the append just persisted — semi-join the
-    // within-batch winners against the hashes read back from the newly
-    // added files (pre-append snapshot diff; the IncrementalNearDup r10
-    // return-path device). A caller consuming the result re-runs only
-    // the batch-local election plus an O(batch) semi-join — never the
-    // anti-join against the full index snapshot — and re-execution
-    // stays deterministic on the pinned file list. `withinBatch` keeps
-    // one row per hash, so the semi-join restores exactly the elected
-    // survivor rows.
-    val newFiles = (Partitioned.dataFiles(spark, hashesPath(path)).toSet -- snapshot.toSet).toSeq
-    if (newFiles.isEmpty) batch.filter(lit(false)) // everything deduped away
-    else withinBatch.join(
-      spark.read.schema(hashSchema).parquet(newFiles: _*).select(col("__h")),
-      Seq("__h"), "left_semi").drop("__h")
+    survivors.drop("__h", "__b")
   }
 }

@@ -5,7 +5,8 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDown
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** The lifecycle queries prove their invariants without Spark jobs of
@@ -15,17 +16,25 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   */
 class BuildJobsSpec extends SparkSpec {
 
-  /** For each job started while `build` runs, in start order: the
-    * physical plan of the SQL execution that launched it, or "" for a
-    * job outside any SQL execution (a parquet schema inference). A
-    * canary job closes the window: listener events arrive in order, so
-    * once it is seen every earlier job has been recorded.
+  /** One job: the physical plan of the SQL execution that launched it
+    * ("" for a job outside any SQL execution, a parquet schema
+    * inference), whether one of its stages scans files, and the input
+    * records its tasks read.
     */
-  private def jobPlansDuring(build: => Unit): Seq[String] = {
+  private case class Job(plan: String, scansFiles: Boolean, records: Long)
+
+  /** `block`'s result and the jobs started while it ran, in start order.
+    * A canary job closes the window: listener events arrive in order, so
+    * once it is seen every earlier job and task has been recorded.
+    */
+  private def jobsDuring[T](block: => T): (T, Seq[Job]) = {
     val canary = "build-jobs-spec-canary"
     val seen = new CountDownLatch(1)
     val plans = new ConcurrentHashMap[Long, String]()
-    val jobs = new ConcurrentLinkedQueue[Option[Long]]()
+    val stageJob = new ConcurrentHashMap[Int, Int]()
+    val records = new ConcurrentHashMap[Int, Long]()
+    val scans = ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new ConcurrentLinkedQueue[(Int, Option[Long])]()
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case x: SparkListenerSQLExecutionStart =>
@@ -35,19 +44,33 @@ class BuildJobsSpec extends SparkSpec {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val props = Option(e.properties)
         if (props.exists(_.getProperty("spark.job.description") == canary)) seen.countDown()
-        else jobs.add(props.flatMap(p =>
-          Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)): Unit
+        else {
+          e.stageInfos.foreach { st =>
+            stageJob.put(st.stageId, e.jobId)
+            if (st.rddInfos.exists(_.name == "FileScanRDD")) scans.add(e.jobId)
+          }
+          records.put(e.jobId, 0L)
+          jobs.add((e.jobId, props.flatMap(p =>
+            Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong))): Unit
+        }
       }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(stageJob.get(e.stageId)).foreach { j =>
+          records.merge(j, e.taskMetrics.inputMetrics.recordsRead, _ + _): Unit
+        }
     }
     spark.sparkContext.addSparkListener(listener)
-    try {
-      build
+    val result = try {
+      val r = block
       spark.sparkContext.setJobDescription(canary)
       try spark.sparkContext.parallelize(Seq(1), 1).count()
       finally spark.sparkContext.setJobDescription(null)
       assert(seen.await(60, TimeUnit.SECONDS), "listener never saw the canary job")
+      r
     } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.asScala.toSeq.map(_.map(plans.getOrDefault(_, "")).getOrElse(""))
+    (result, jobs.asScala.toSeq.map { case (id, exec) =>
+      Job(exec.map(plans.getOrDefault(_, "")).getOrElse(""), scans.contains(id), records.get(id))
+    })
   }
 
   test("x90 and x151 run only their write jobs while building their frames") {
@@ -55,11 +78,27 @@ class BuildJobsSpec extends SparkSpec {
     for (q <- Seq("x90_idempotent_overwrite", "x151_snapshot_schema_evolution")) {
       val fn = SparkEntry.queries(q)
       fn(spark, dir).collect() // warm: the source tables' schemas are memoized
-      val plans = jobPlansDuring(fn(spark, dir))
+      val plans = jobsDuring(fn(spark, dir))._2.map(_.plan)
       assert(plans.nonEmpty, s"$q: no write job seen")
       val other = plans.filterNot(_.contains("InsertIntoHadoopFsRelationCommand"))
       assert(other.isEmpty,
         s"$q ran ${other.size} job(s) besides its writes:\n${other.mkString("\n")}")
     }
+  }
+
+  test("x32 elects each batch once: at most 8 jobs, and its action scans no file") {
+    val dir = "perfbench/data/sf0.001"
+    val fn = SparkEntry.queries("x32_incremental_dedup")
+    // warm, as above; the survivor counts are what the action may read
+    val survivors = fn(spark, dir).collect().map(_.getAs[Long]("n_survivors")).sum
+    val (df, build) = jobsDuring(fn(spark, dir))
+    val action = jobsDuring(Bench.hashReduce(df).collect())._2
+    assert(build.size + action.size <= 8,
+      s"x32 ran ${build.size} build + ${action.size} action jobs")
+    assert(!action.exists(_.scansFiles), s"x32's action scans files: $action")
+    // Spark counts reads of cached blocks as input records: the action
+    // reads each checkpointed survivor once and nothing else
+    assert(action.map(_.records).sum == survivors,
+      s"x32's action read ${action.map(_.records)}, not $survivors survivor rows")
   }
 }

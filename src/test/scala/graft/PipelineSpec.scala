@@ -590,6 +590,117 @@ class PipelineSpec extends SparkSpec {
       fileSet().isEmpty, "stale bucket files survived a full deletion")
   }
 
+  test("incremental dedup: survivors and index equal exactDedup then an anti-join vs the pinned snapshot") {
+    import spark.implicits._
+    import graft.sources.Partitioned
+    import graft.text.{IncrementalDedup, TextOps}
+    val path = s"${Scratch.sub("dedup-test")}/${java.util.UUID.randomUUID()}"
+    val rnd = new scala.util.Random(20261019L)
+    // within-batch case and whitespace variants of 24 contents
+    def variant(i: Int): String = {
+      val t = s"content number ${i % 24} here"
+      val cased = if (rnd.nextBoolean()) t.toUpperCase else t
+      val spaced = if (rnd.nextBoolean()) cased.replace(" ", "   ") else cased
+      if (rnd.nextBoolean()) s"  $spaced\t" else spaced
+    }
+    def mk(ids: Seq[Long]) =
+      rnd.shuffle(ids).map(i => (i, variant(rnd.nextInt(1000)))).toDF("doc_id", "text")
+    val b1 = mk(0L until 30L)
+    val b2 = mk(30L until 90L) // most contents are cross-batch duplicates
+    val batches = Seq(b1, b2, b2) // the re-ingest of b2 has zero survivors
+    def hashesIn(files: Seq[String]): Seq[String] =
+      if (files.isEmpty) Nil
+      else spark.read.parquet(files: _*).select("__h").as[String].collect().toSeq
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val snap = Partitioned.dataFiles(spark, s"$path/hashes")
+      val elected = TextOps.exactDedup(b, "text", Seq("doc_id"))
+        .withColumn("__h", TextOps.contentHash(col("text")))
+      val old =
+        if (snap.isEmpty) elected
+        else elected.join(spark.read.parquet(snap: _*).select("__h"), Seq("__h"), "left_anti")
+      val want = old.select("doc_id", "text").as[(Long, String)].collect().toSet
+      val wantHashes = hashesIn(snap).toSet ++
+        old.select("__h").as[String].collect()
+      val got = IncrementalDedup.dedupIncremental(b, "text", Seq("doc_id"), path, nBuckets = 8)
+      assert(got.columns.toSeq == Seq("doc_id", "text"))
+      assert(got.as[(Long, String)].collect().toSet == want, s"batch $i survivors")
+      val idx = hashesIn(Partitioned.dataFiles(spark, s"$path/hashes"))
+      assert(idx.size == idx.toSet.size, s"batch $i duplicated an index hash")
+      assert(idx.toSet == wantHashes, s"batch $i index hashes")
+      if (i == 2) assert(want.isEmpty)
+      else assert(want.nonEmpty)
+    }
+  }
+
+  test("incremental dedup: the returned frame reads the same rows after compactIndex and deleteFromIndex") {
+    import spark.implicits._
+    import graft.text.IncrementalDedup
+    val path = s"${Scratch.sub("dedup-test")}/${java.util.UUID.randomUUID()}"
+    val docs = (0L until 60L).map(i => (i, s"body ${i % 41}")).toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, String)].collect().sorted.toSeq
+    val s1 = IncrementalDedup.dedupIncremental(
+      docs.filter(col("doc_id") % 2 === 0), "text", Seq("doc_id"), path, nBuckets = 8)
+    val s2 = IncrementalDedup.dedupIncremental(docs, "text", Seq("doc_id"), path, nBuckets = 8)
+    val (r1, r2) = (rows(s1), rows(s2))
+    assert(r1.nonEmpty && r2.nonEmpty)
+    // the rewrite deletes every file the two appends wrote
+    IncrementalDedup.compactIndex(spark, path, nBuckets = 4)
+    assert(rows(s1) == r1 && rows(s2) == r2, "consumed after compactIndex")
+    val removed = IncrementalDedup.deleteFromIndex(
+      spark, path, docs.filter(col("doc_id") % 5 === 0), "text", nBuckets = 4)
+    assert(removed > 0)
+    assert(rows(s1) == r1 && rows(s2) == r2, "consumed after deleteFromIndex")
+  }
+
+  test("incremental dedup: a null-text row survives once and its null hash enters the index") {
+    import spark.implicits._
+    import graft.text.IncrementalDedup
+    val path = s"${Scratch.sub("dedup-test")}/${java.util.UUID.randomUUID()}"
+    val b = Seq[(Long, String)]((0L, "alpha"), (1L, null), (2L, " ALPHA "), (3L, null))
+      .toDF("doc_id", "text")
+    val got = IncrementalDedup.dedupIncremental(b, "text", Seq("doc_id"), path)
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    // the null hashes elect one keeper, like any other hash group
+    assert(got == Seq(0L, 1L))
+    val idx = spark.read.parquet(s"$path/hashes").select("__h").as[String].collect()
+    assert(idx.count(_ == null) == 1 && idx.length == 2, idx.toSeq)
+  }
+
+  test("incremental dedup: a batch adds at most one file per touched bucket, broadcast or sort-merge anti-join") {
+    import spark.implicits._
+    import graft.sources.Partitioned
+    import graft.text.IncrementalDedup
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    def layout(): Unit = {
+      val path = s"${Scratch.sub("dedup-test")}/${java.util.UUID.randomUUID()}"
+      var seen = Set.empty[String]
+      for (m <- 0L until 3L) {
+        // new contents in every batch, plus duplicates within and across batches
+        val b = (0L until 400L).filter(_ % 3 == m)
+          .map(i => (i, if (i % 4 == 0) s"shared ${i % 50}" else s"own $i"))
+          .toDF("doc_id", "text")
+        IncrementalDedup.dedupIncremental(b, "text", Seq("doc_id"), path, nBuckets = 8)
+        val files = Partitioned.dataFiles(spark, s"$path/hashes").toSet
+        val added = (files -- seen).toSeq
+          .groupBy(f => "__b=([0-9]+)".r.findFirstMatchIn(f).get.group(1))
+        assert(added.nonEmpty, s"batch $m appended nothing")
+        assert(added.values.forall(_.size == 1),
+          s"batch $m: ${added.map { case (k, v) => k -> v.size }}")
+        seen = files
+      }
+    }
+    try {
+      layout()
+      spark.conf.set(key, "-1")
+      layout()
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("compactIndex: file count collapses, decisions unchanged, re-bucketing safe") {
     import spark.implicits._
     import graft.text.{IncrementalDedup, IncrementalNearDup}
