@@ -92,7 +92,7 @@ object DedupQueries {
     * euclidean, code-asc tie-break — `Pq.encodeCol`'s array_sort
     * contract), recon norm = sqrt of the summed sub-centroid square
     * norms, score = ADC dot / (|q|·recon-norm), rank = cosine desc /
-    * id asc (the TopKAgg contract). With `cents` given, the IVF layer is
+    * id asc (the `graft.functions.TopK` order). With `cents` given, the IVF layer is
     * replayed too: corpus rows assigned to their argmin cell, each query
     * probing its `nprobe` nearest cells (distance-then-cell-asc order —
     * `Ivf.probeCells`), candidates restricted to probed cells.

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{col, unix_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -63,6 +66,33 @@ object Tables {
     */
   def rowCount(spark: SparkSession, dir: String, name: String): Long =
     graft.sources.Partitioned.footerRowCount(spark, file(dir, name))
+
+  /** Whether `df` has at most `max` rows — the guard a caller `require`s
+    * before it broadcasts or collects `df`. The answer comes without a
+    * Spark job where the plan proves it: first the optimizer's `maxRows`
+    * (a limit, a local relation, a range), then, for projections and
+    * filters over one parquet relation, the footer row counts of its
+    * files. Only when neither bound is within `max` does it run a
+    * `limit(max + 1).count()` probe, which stops reading once it has seen
+    * one row too many.
+    */
+  def atMostRows(df: DataFrame, max: Long): Boolean = {
+    def parquetFiles(p: LogicalPlan): Option[Seq[String]] = p match {
+      case Project(_, child) => parquetFiles(child)
+      case Filter(_, child) => parquetFiles(child)
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation if h.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          Some(h.location.inputFiles.toSeq)
+        case _ => None
+      }
+      case _ => None
+    }
+    val plan = df.queryExecution.optimizedPlan
+    plan.maxRows.exists(_ <= max) ||
+      parquetFiles(plan).exists(fs =>
+        graft.sources.Partitioned.footerRowCountFiles(df.sparkSession, fs) <= max) ||
+      df.limit(math.min(max, Int.MaxValue - 1L).toInt + 1).count() <= max
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "nation")

@@ -1,10 +1,10 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Scored, TopKAgg}
+import graft.functions.TopK
 
 /** Exact k-nearest-neighbour classification as a top-k-per-group query
   * (reference D1, `fdi_flow/detectors/sklearn_detectors.py:19-253`).
@@ -12,7 +12,7 @@ import graft.functions.{Scored, TopKAgg}
   * Plan shape: broadcast the (small) test side against the train side,
   * compute the distance as a codegen'd higher-order-function expression
   * over the embedding arrays, then reduce to k candidates per test row
-  * with the bounded [[graft.functions.TopKAgg]] — partial (map-side)
+  * with the native bounded [[graft.functions.TopK]] — partial (map-side)
   * aggregation keeps at most k rows per (partition, test row), so the
   * train side never shuffles its full cross product; only `k·P·|test|`
   * candidate rows reach the exchange, and the vote aggregate downstream
@@ -29,10 +29,6 @@ object Knn {
   def squaredDistance(a: Column, b: Column): Column =
     graft.functions.ArraySqDist(a, b)
 
-  /** Bounded top-k of (score asc, id asc) with a rider payload column. */
-  private[graft] def topK(k: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udaf(new TopKAgg(k), Encoders.product[Scored])
-
   /** Default ceiling on the broadcast (test/query) side of the exact-KNN
     * cross join: 100k rows is tens of MB at typical feature widths —
     * comfortably inside an executor broadcast budget. Past it the exact
@@ -42,15 +38,14 @@ object Knn {
     */
   val MaxBroadcastTestRows: Long = 100000L
 
-  /** Broadcast the test side only after a bounded row probe: a
-    * `limit(max+1).count()` scan (short-circuits — never counts the full
-    * frame) fails fast with a pointer at the LSH/IVF substitutes instead
-    * of letting an oversized broadcast OOM the executors mid-join.
+  /** Broadcast the test side only after [[graft.Tables.atMostRows]]
+    * bounds it (from the plan or the parquet footers, else a
+    * short-circuiting row probe): an oversized test side fails fast with
+    * a pointer at the LSH/IVF substitutes instead of OOMing the executors
+    * mid-join.
     */
   private def guardedBroadcast(test: DataFrame, maxRows: Long): DataFrame = {
-    val probeCap = math.min(maxRows + 1, Int.MaxValue.toLong).toInt
-    val probe = test.limit(probeCap).count()
-    require(probe <= maxRows,
+    require(graft.Tables.atMostRows(test, maxRows),
       s"exact KNN broadcasts the test side, which exceeds $maxRows rows; " +
         "for query sets this large use the approximate paths " +
         "(graft.similarity.Ann.cosineTopKLsh or graft.similarity.Ivf)")
@@ -78,7 +73,7 @@ object Knn {
       .crossJoin(t)
       .withColumn("__d2", squaredDistance(col("__qf"), col("__tf")))
     val topk = joined.groupBy(col(testIdCol))
-      .agg(topK(k)(col("__d2"), col("__tid").cast("long"), col("__lbl").cast("long")).as("__tk"))
+      .agg(TopK(col("__d2"), col("__tid"), col("__lbl"), k).as("__tk"))
     val votes = topk
       .select(col(testIdCol), explode(col("__tk.hits.payload")).as("__lbl"))
       .groupBy(col(testIdCol), col("__lbl"))
@@ -229,7 +224,7 @@ object Knn {
       .crossJoin(t)
       .withColumn("__dp", minkowskiPow(col("__qf"), col("__tf"), p))
     joined.groupBy(col(testIdCol))
-      .agg(topK(k)(col("__dp"), col("__tid").cast("long"), col("__lbl").cast("long")).as("__tk"))
+      .agg(TopK(col("__dp"), col("__tid"), col("__lbl"), k).as("__tk"))
   }
 
   /** k nearest neighbours themselves (rank + id + squared distance). */
@@ -250,7 +245,7 @@ object Knn {
       .filter(if (excludeSelf) col("__tid") =!= col("__qid") else lit(true))
       .withColumn("__d2", squaredDistance(col("__qf"), col("__tf")))
     joined.groupBy(col("__qid"))
-      .agg(topK(k)(col("__d2"), col("__tid").cast("long"), lit(0L)).as("__tk"))
+      .agg(TopK(col("__d2"), col("__tid"), lit(0L), k).as("__tk"))
       .select(col("__qid"), posexplode(col("__tk.hits")).as(Seq("__pos", "__h")))
       .select(col("__qid").as(testIdCol), (col("__pos") + 1).cast("int").as("rank"),
         col("__h.id").as("neighbor_id"), col("__h.score").as("dist2"))

@@ -1,9 +1,9 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Scored, TopKAgg}
+import graft.functions.TopK
 
 /** Similarity search over embedding columns (`Array[Float]`) — SURVEY
   * §2.8 north-star: brute-force cosine top-k as the exact baseline, and a
@@ -12,10 +12,10 @@ import graft.functions.{Scored, TopKAgg}
   *
   * Plan shape shared by both paths: per-row norms are computed ONCE
   * before the join (cosine then costs a single dot-product pass per
-  * candidate pair), and the per-query ranking is the bounded
-  * [[graft.functions.TopKAgg]] — map-side partials keep ≤k candidates per
-  * (partition, query), so the exchange carries k·P rows per query instead
-  * of the whole candidate product.
+  * candidate pair), and the per-query ranking is the native bounded
+  * [[graft.functions.TopK]] aggregate — map-side partials keep ≤k
+  * candidates per (partition, query), so the exchange carries k·P rows
+  * per query instead of the whole candidate product.
   */
 object Ann {
 
@@ -31,8 +31,6 @@ object Ann {
 
   /** cos(a,b) = a·b / (|a|·|b|) in double precision. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  private def topK(k: Int) = udaf(new TopKAgg(k), Encoders.product[Scored])
 
   /** Per-vector symmetric int8 scalar quantization for embedding STORAGE
     * — the public FAISS `ScalarQuantizer` 8-bit contract (Johnson, Douze
@@ -128,7 +126,7 @@ object Ann {
       .withColumn("__ham",
         hammingPacked(col("__qb"), col("__cb")).cast("double"))
       .groupBy(col("__qid"))
-      .agg(topK(candidates)(col("__ham"), col("__cid"), lit(0L)).as("__tk"))
+      .agg(TopK(col("__ham"), col("__cid"), lit(0L), candidates).as("__tk"))
       .select(col("__qid"), explode(col("__tk.hits")).as("__h"))
       .select(col("__qid"), col("__h.id").as("__cid"))
     val cands = shortlist
@@ -193,7 +191,7 @@ object Ann {
       .filter(if (excludeSelf) col("__cid") =!= col("__qid") else lit(true))
       .withColumn("__score", score)
       .groupBy(col("__qid"))
-      .agg(topK(k)(-col("__score"), col("__cid").cast("long"), lit(0L))
+      .agg(TopK(-col("__score"), col("__cid"), lit(0L), k)
         .as("__tk"))
       .select(col("__qid"),
         posexplode(col("__tk.hits")).as(Seq("__pos", "__h")))
@@ -243,7 +241,7 @@ object Ann {
     cands
       .withColumn("__cos", cosExpr)
       .groupBy(col("__qid"))
-      .agg(topK(k)(-col("__cos"), col("__cid").cast("long"), lit(0L)).as("__tk"))
+      .agg(TopK(-col("__cos"), col("__cid"), lit(0L), k).as("__tk"))
       .select(col("__qid"), posexplode(col("__tk.hits")).as(Seq("__pos", "__h")))
       .select(col("__qid").as(queryIdCol), (col("__pos") + 1).cast("int").as("rank"),
         col("__h.id").as("neighbor_id"), (-col("__h.score")).as("cosine"))

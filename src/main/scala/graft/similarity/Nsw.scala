@@ -133,8 +133,7 @@ object Nsw {
       : Array[(Long, Array[Double], Double)] = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val probe = queries.limit((MaxQueries + 1).toInt).count()
-    require(probe <= MaxQueries,
+    require(graft.Tables.atMostRows(queries, MaxQueries),
       s"NSW search broadcasts the query vectors; got > $MaxQueries rows — " +
         "swap the arguments or batch the queries")
     queries

@@ -1,7 +1,13 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{BinaryType, DataType}
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Versioned snapshot reads over plain parquet — the commit-log device
   * of Delta/Iceberg reduced to its load-bearing core, for the one
@@ -490,38 +496,47 @@ object Snapshots {
   // 100 TB a k-key digest lookup touches the few files the keys hash
   // into, not the table.
 
-  /** Per-file Bloom aggregator over a string key — built with the public
+  /** Per-file Bloom aggregate over a string key — built with the public
     * `org.apache.spark.util.sketch.BloomFilter` so the driver-side probe
-    * (`mightContainString`) is bit-compatible with the build.
+    * (`mightContainString`) is bit-compatible with the build. A native
+    * `TypedImperativeAggregate`: the buffer crosses the shuffle as the
+    * filter's own `writeTo` bytes, and `eval` returns those bytes. Null
+    * keys are skipped.
     */
-  private class BloomAgg(expected: Long, fpp: Double)
-      extends org.apache.spark.sql.expressions.Aggregator[
-        String, org.apache.spark.util.sketch.BloomFilter, Array[Byte]] {
-    def zero: org.apache.spark.util.sketch.BloomFilter =
-      org.apache.spark.util.sketch.BloomFilter.create(expected, fpp)
-    def reduce(
-        b: org.apache.spark.util.sketch.BloomFilter,
-        a: String): org.apache.spark.util.sketch.BloomFilter = {
-      if (a != null) b.putString(a)
+  private case class BloomAgg(
+      child: Expression,
+      expected: Long,
+      fpp: Double,
+      override val mutableAggBufferOffset: Int = 0,
+      override val inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[BloomFilter] {
+    override def children: Seq[Expression] = Seq(child)
+    override def nullable: Boolean = false
+    override def dataType: DataType = BinaryType
+    override def prettyName: String = "bloom_agg"
+
+    override def createAggregationBuffer(): BloomFilter = BloomFilter.create(expected, fpp)
+    override def update(b: BloomFilter, input: InternalRow): BloomFilter = {
+      val v = child.eval(input)
+      if (v != null) b.putString(v.toString)
       b
     }
-    def merge(
-        b1: org.apache.spark.util.sketch.BloomFilter,
-        b2: org.apache.spark.util.sketch.BloomFilter)
-        : org.apache.spark.util.sketch.BloomFilter = {
-      b1.mergeInPlace(b2)
-      b1
-    }
-    def finish(b: org.apache.spark.util.sketch.BloomFilter): Array[Byte] = {
+    override def merge(b: BloomFilter, other: BloomFilter): BloomFilter = b.mergeInPlace(other)
+    override def eval(b: BloomFilter): Any = serialize(b)
+    override def serialize(b: BloomFilter): Array[Byte] = {
       val bos = new java.io.ByteArrayOutputStream()
       b.writeTo(bos)
       bos.toByteArray
     }
-    def bufferEncoder
-        : org.apache.spark.sql.Encoder[org.apache.spark.util.sketch.BloomFilter] =
-      org.apache.spark.sql.Encoders.javaSerialization
-    def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-      org.apache.spark.sql.Encoders.BINARY
+    override def deserialize(bytes: Array[Byte]): BloomFilter =
+      BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
+
+    override def withNewMutableAggBufferOffset(newOffset: Int): BloomAgg =
+      copy(mutableAggBufferOffset = newOffset)
+    override def withNewInputAggBufferOffset(newOffset: Int): BloomAgg =
+      copy(inputAggBufferOffset = newOffset)
+    override protected def withNewChildrenInternal(
+        newChildren: IndexedSeq[Expression]): BloomAgg = copy(child = newChildren(0))
   }
 
   private def bloomSidecar(colName: String): String = {
@@ -543,8 +558,8 @@ object Snapshots {
     val v = latestVersion(spark, path)
     val rels = activeFiles(spark, path, v)
     if (rels.isEmpty) return 0
-    val agg = udaf(new BloomAgg(expectedPerFile, fpp),
-      org.apache.spark.sql.Encoders.STRING)
+    def agg(key: Column): Column = ColumnBridge.column(
+      BloomAgg(ColumnBridge.expression(key), expectedPerFile, fpp).toAggregateExpression())
     val perFile = readFiles(spark, path, rels, readSchema(spark, path, v),
         s"bloom index at $path")
       .select(relCol.as("__rel"), col(colName).cast("string").as("__key"))

@@ -38,11 +38,12 @@ object Pipeline {
     */
   val MaxBenchDocs: Long = 100000L
 
-  /** NOTE: the row probe below runs a Spark job at CALL time, and `bench`
-    * is evaluated twice (probe + broadcast gram build) — persist/cache an
-    * expensive bench frame before calling, and ALWAYS cache a
-    * non-deterministic one (it could otherwise pass the probe yet exceed
-    * the cap at broadcast time).
+  /** NOTE: unless the plan or the parquet footers bound `bench`, the row
+    * guard below runs a probe job at CALL time, and `bench` is evaluated
+    * twice (probe + broadcast gram build) — persist/cache an expensive
+    * bench frame before calling, and ALWAYS cache a non-deterministic one
+    * (it could otherwise pass the probe yet exceed the cap at broadcast
+    * time).
     */
   def contaminationReport(
       corpus: DataFrame,
@@ -52,14 +53,12 @@ object Pipeline {
       n: Int = 5,
       minShared: Int = 1,
       maxBenchDocs: Long = MaxBenchDocs): DataFrame = {
-    // Bounded row probe before the broadcast (the Knn.guardedBroadcast
-    // shape): limit(max+1).count() short-circuits — it never scans the
-    // full frame — and fails fast instead of OOMing executors mid-join.
-    // A cap that limit() cannot express (≥ Int.MaxValue−1) is a deliberate
-    // guard disable — skip the probe rather than overflow into one.
+    // Bounded row count before the broadcast (the Knn.guardedBroadcast
+    // shape): fails fast instead of OOMing executors mid-join. A cap that
+    // limit() cannot express (≥ Int.MaxValue−1) is a deliberate guard
+    // disable — skip the bound rather than overflow into one.
     if (maxBenchDocs < Int.MaxValue.toLong - 1) {
-      val probe = bench.limit((maxBenchDocs + 1).toInt).count()
-      require(probe <= maxBenchDocs,
+      require(graft.Tables.atMostRows(bench, maxBenchDocs),
         s"contaminationReport broadcasts the benchmark side's distinct $n-gram " +
           s"set, but bench exceeds $maxBenchDocs rows (maxBenchDocs); eval " +
           "suites are driver-small by definition — check the corpus and bench " +
@@ -177,8 +176,7 @@ object Pipeline {
       maxBenchDocs: Long = MaxBenchDocs): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     if (maxBenchDocs < Int.MaxValue.toLong - 1) {
-      val probe = bench.limit((maxBenchDocs + 1).toInt).count()
-      require(probe <= maxBenchDocs,
+      require(graft.Tables.atMostRows(bench, maxBenchDocs),
         s"contaminationReportFuzzy broadcasts the benchmark side's banded " +
           s"MinHash keys and shingle sets, but bench exceeds $maxBenchDocs " +
           "rows (maxBenchDocs); eval suites are driver-small by definition")

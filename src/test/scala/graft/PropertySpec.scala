@@ -2,10 +2,13 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.types.{DoubleType, LongType}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 
-import graft.functions.{FFT, HashRandom, Scored, TopKAgg}
+import graft.functions.{FFT, HashRandom, TopK}
 import graft.multimodal.{Png, Wav}
 
 /** Property-based checks over the pure kernels — seeded, so every run
@@ -74,29 +77,40 @@ class PropertySpec extends SparkSpec {
     })
   }
 
-  test("TopKAgg: any partitioning + merge order equals sorted take-k") {
+  test("TopK: any partitioning + merge order equals sorted take-k") {
     val input = for {
       k <- Gen.choose(1, 8)
       n <- Gen.choose(0, 60)
       rows <- Gen.listOfN(n, for {
         s <- Gen.oneOf(Gen.choose(-5.0, 5.0), Gen.oneOf(0.0, 1.0, Double.NaN))
         id <- Gen.choose(0L, 20L) // narrow id range → duplicate ids + scores
-      } yield Scored(s, id, 0L))
+      } yield (s, id, 0L))
       cuts <- Gen.choose(1, 5)
     } yield (k, rows, cuts)
+    // bits, so that NaN equals NaN and -0.0 differs from 0.0
+    def key(h: (Double, Long, Long)) = (java.lang.Double.doubleToLongBits(h._1), h._2, h._3)
     check(Prop.forAll(input) { case (k, rows, cuts) =>
-      val agg = new TopKAgg(k)
-      val chunks = if (rows.isEmpty) Seq(Seq.empty[Scored])
+      val agg = TopK(BoundReference(0, DoubleType, nullable = false),
+        BoundReference(1, LongType, nullable = false),
+        BoundReference(2, LongType, nullable = false), k)
+      val chunks = if (rows.isEmpty) Seq(Seq.empty[(Double, Long, Long)])
         else rows.grouped(math.max(1, rows.length / cuts)).toSeq
+      // each partial crosses a shuffle as bytes, as in a Spark plan
       val merged = chunks
-        .map(c => c.foldLeft(agg.zero)((b, r) => agg.reduce(b, r)))
+        .map(c => agg.serialize(c.foldLeft(agg.createAggregationBuffer())((b, r) =>
+          agg.update(b, InternalRow(r._1, r._2, r._3)))))
+        .map(agg.deserialize)
         .reduceLeft((a, b) => agg.merge(a, b))
-      val got = agg.finish(merged).hits
+      val hits = agg.eval(merged).asInstanceOf[InternalRow].getArray(0)
+      val got = (0 until hits.numElements()).map { i =>
+        val h = hits.getStruct(i, 3)
+        (h.getDouble(0), h.getLong(1), h.getLong(2))
+      }
       val expect = rows.sortWith { (a, b) =>
-        val c = java.lang.Double.compare(a.score, b.score)
-        c < 0 || (c == 0 && a.id < b.id)
+        val c = java.lang.Double.compare(a._1, b._1)
+        c < 0 || (c == 0 && a._2 < b._2)
       }.take(k)
-      got == expect
+      got.map(key) == expect.map(key)
     })
   }
 
