@@ -964,8 +964,8 @@ object JoinQueries {
           .repartition(32) // simulate 32 ingest writer tasks
           .write.mode("overwrite").partitionBy("event_type").parquet(frag)
         Partitioned.compact(s, frag, compacted, "event_type")
-        val (before, after) = (Partitioned.fileCount(frag),
-          Partitioned.fileCount(compacted))
+        val (before, after) = (Partitioned.dataFiles(s, frag).size,
+          Partitioned.dataFiles(s, compacted).size)
         require(after * 8 <= before,
           s"compaction must collapse the file count: $before -> $after")
         Partitioned.scan(s, compacted)

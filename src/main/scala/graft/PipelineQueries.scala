@@ -543,9 +543,10 @@ object PipelineQueries {
       s: org.apache.spark.sql.SparkSession,
       path: String): org.apache.spark.sql.DataFrame = {
     import graft.text.InvertedIndex
-    val filesBefore = graft.sources.Partitioned.fileCount(s"$path/postings")
+    import graft.sources.Partitioned
+    val filesBefore = Partitioned.dataFiles(s, s"$path/postings").size
     InvertedIndex.compactIndex(s, path)
-    val filesAfter = graft.sources.Partitioned.fileCount(s"$path/postings")
+    val filesAfter = Partitioned.dataFiles(s, s"$path/postings").size
     require(filesAfter < filesBefore,
       s"compaction did not shrink the layout: $filesBefore -> $filesAfter")
     val pruned = InvertedIndex.prunedPostings(s, path, InvIdxTerms)
@@ -1180,9 +1181,7 @@ object PipelineQueries {
         import graft.text.InvertedIndex
         val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
         val path = s"${Scratch.dir}/graft_invidx_stream_$tag"
-        val fsPath = new org.apache.hadoop.fs.Path(path)
-        val fs = fsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(fsPath)) fs.delete(fsPath, true)
+        graft.sources.Partitioned.deleteTree(s, path)
         val docs = Tables.documents(s, dir)
           .select(col("doc_id").cast("long"), col("text"))
           .as[(Long, String)].collect()

@@ -33,17 +33,12 @@ import org.apache.spark.sql.functions._
 object DeltaRollup {
 
   /** True iff a summary exists at `path`. */
-  def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def exists(spark: SparkSession, path: String): Boolean =
+    graft.sources.Partitioned.exists(spark, path)
 
   /** Drop the summary (fresh-build convenience). */
-  def drop(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
+  def drop(spark: SparkSession, path: String): Unit =
+    graft.sources.Partitioned.deleteTree(spark, path)
 
   /** Read the current summary: `(keyCols..., n_rows, weight_sum)`. */
   def read(spark: SparkSession, path: String): DataFrame =

@@ -56,6 +56,14 @@ object IncrementalSemDedup {
   private def statePath(path: String) = s"$path/state"
   private def centroidsPath(path: String) = s"$path/centroids"
 
+  /** The state files' columns; the cell-partitioned directory adds the
+    * `__cell` partition column (equal to `__c`) on a directory read.
+    */
+  private val StateSchema = StructType(Seq(
+    StructField("__id", LongType),
+    StructField("__vec", ArrayType(DoubleType)),
+    StructField("__c", IntegerType)))
+
   /** Per-(application, path) memo of the FROZEN quantizer: every ingest
     * wave and erasure consulted the centroid parquet with a full Spark
     * job (read + sort + collect) for 8 rows that are immutable by the
@@ -74,19 +82,15 @@ object IncrementalSemDedup {
   }
 
   /** True iff an index (frozen quantizer) exists at `path`. */
-  def indexExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(centroidsPath(path))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def indexExists(spark: SparkSession, path: String): Boolean =
+    Partitioned.exists(spark, centroidsPath(path))
 
   /** Delete the index at `path` (fresh-build convenience; a production
     * retrain writes to a new path and swaps).
     */
   def dropIndex(spark: SparkSession, path: String): Unit = {
     centsCache.remove(cacheKey(spark, path))
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    Partitioned.deleteTree(spark, path)
   }
 
   /** The frozen quantizer persisted at `path` (cell-ordered). */
@@ -100,30 +104,12 @@ object IncrementalSemDedup {
   /** Compact the state: rewrite the accumulated per-batch append files
     * into O(1) files per cell ([[graft.text.IncrementalDedup.compactIndex]]
     * contract; the cell layout is fixed by the frozen quantizer so there
-    * is no re-bucketing knob here). Row-set preserved exactly
-    * (require()-guarded); snapshot pinned and materialized before the
-    * overwrite.
+    * is no re-bucketing knob here): [[Partitioned.compactInPlace]] over
+    * the state directory, whose `__cell` partition column rides through.
     */
-  def compactIndex(spark: SparkSession, path: String): Unit = {
-    val snap = Partitioned.dataFiles(spark, statePath(path))
-    if (snap.isEmpty) return
-    val stSchema = StructType(Seq(
-      StructField("__id", LongType),
-      StructField("__vec", ArrayType(DoubleType)),
-      StructField("__c", IntegerType)))
-    val all = spark.read.schema(stSchema).parquet(snap: _*)
-      .withColumn("__cell", col("__c"))
-    // row-conservation proof from parquet footers — exact, driver-side,
-    // no count() scans bracketing the rewrite
-    val before = graft.sources.Partitioned.footerRowCountFiles(spark, snap)
-    val pinned = all.repartition(col("__cell")).localCheckpoint(true)
-    pinned.write.mode("overwrite").partitionBy("__cell")
-      .parquet(statePath(path))
-    val after = graft.sources.Partitioned.footerRowCount(
-      spark, statePath(path))
-    require(after == before,
-      s"compaction changed the state row set: $before -> $after rows")
-  }
+  def compactIndex(spark: SparkSession, path: String): Unit =
+    Partitioned.compactInPlace(spark, statePath(path),
+      spark.read.schema(StateSchema).parquet(statePath(path)), "__cell")
 
   /** Delete residents from the persisted state — the right-to-be-
     * forgotten op for the semantic tier (the x136/x137 contract on the
@@ -150,36 +136,16 @@ object IncrementalSemDedup {
         col(vecCol).cast("array<double>").as("__vec"))
       .withColumn("__c", Ivf.probeCells(col("__vec"), cents, 1).getItem(0))
       .localCheckpoint()
-    val touched = del.select(col("__c")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val touchedSnap = snap.filter(f =>
-      touched.exists(c => f.contains(s"__cell=$c/")))
+    val partDirs = del.select(col("__c")).distinct()
+      .collect().map(r => s"__cell=${r.getInt(0)}").toSeq
+    val touchedSnap = Partitioned.filesIn(snap, partDirs)
     if (touchedSnap.isEmpty) return 0L
-    val stSchema = StructType(Seq(
-      StructField("__id", LongType),
-      StructField("__vec", ArrayType(DoubleType)),
-      StructField("__c", IntegerType)))
-    val resident = spark.read.schema(stSchema).parquet(touchedSnap: _*)
-    // whole files are read, so the pre-image count is footer metadata
-    val before = graft.sources.Partitioned.footerRowCountFiles(
-      spark, touchedSnap)
-    // materialize survivors BEFORE dropping the directories they read:
-    // the checkpoint is lazy and the count fills it, so every partition
-    // is pinned by one job before any directory goes
-    val kept = resident.join(del.select(col("__id")), Seq("__id"), "left_anti")
+    val kept = spark.read.schema(StateSchema).parquet(touchedSnap: _*)
+      .join(del.select(col("__id")), Seq("__id"), "left_anti")
       .withColumn("__cell", col("__c"))
-      .repartition(col("__cell"))
-      .localCheckpoint(eager = false)
-    val after = kept.count()
-    val fs = new org.apache.hadoop.fs.Path(statePath(path))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.foreach { c =>
-      val dir = new org.apache.hadoop.fs.Path(s"${statePath(path)}/__cell=$c")
-      if (fs.exists(dir)) fs.delete(dir, true)
-    }
-    if (after > 0)
-      kept.write.mode("append").partitionBy("__cell").parquet(statePath(path))
-    before - after
+    // whole files are read, so the pre-image count is footer metadata
+    Partitioned.footerRowCountFiles(spark, touchedSnap) -
+      Partitioned.replacePartitions(spark, statePath(path), partDirs, kept, "__cell")
   }
 
   /** Spark-`round`-compatible 6 dp half-up rounding (BigDecimal over the
@@ -226,15 +192,10 @@ object IncrementalSemDedup {
     val touched = assigned.select(col("__c")).distinct()
       .collect().map(_.getInt(0)).toSet
     val snap = Partitioned.dataFiles(spark, statePath(path))
-    val touchedSnap = snap.filter(f =>
-      touched.exists(c => f.contains(s"__cell=$c/")))
-    val stSchema = StructType(Seq(
-      StructField("__id", LongType),
-      StructField("__vec", ArrayType(DoubleType)),
-      StructField("__c", IntegerType)))
+    val touchedSnap = Partitioned.filesIn(snap, touched.toSeq.map(c => s"__cell=$c"))
     val resident =
       if (touchedSnap.nonEmpty)
-        spark.read.schema(stSchema).parquet(touchedSnap: _*)
+        spark.read.schema(StateSchema).parquet(touchedSnap: _*)
           .select(col("__id"), col("__vec"), col("__c"), lit(true).as("__res"))
       else assigned.limit(0).withColumn("__res", lit(true))
     val thr = threshold

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.ArraySqDist
+import graft.sources.Partitioned
 
 /** IVF (inverted-file) approximate nearest neighbours — the second scale
   * path alongside hyperplane LSH ([[Ann.cosineTopKLsh]]): a KMeans coarse
@@ -56,12 +57,10 @@ object Ivf {
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     centsCache.remove(cacheKey(spark, path))
     cbCache.remove(cacheKey(spark, path))
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      require(fs.exists(new org.apache.hadoop.fs.Path(p, "centroids")),
+    if (Partitioned.exists(spark, path)) {
+      require(Partitioned.exists(spark, s"$path/centroids"),
         s"$path holds no centroids/ - not an IVF index, refusing to delete it")
-      fs.delete(p, true)
+      Partitioned.deleteTree(spark, path)
     }
   }
 
@@ -400,23 +399,9 @@ object Ivf {
     * partition overwrite), so its file count never grows per batch.
     */
   def compactIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    // nlist and the row-conservation proof are parquet footer metadata —
-    // driver-side, no count() scans bracketing the rewrite
-    val nlist = graft.sources.Partitioned.footerRowCount(
-      spark, s"$path/centroids").toInt
-    val before = graft.sources.Partitioned.footerRowCount(
-      spark, s"$path/corpus")
-    // materialize BEFORE overwriting the directory being read
-    val pinned = spark.read.parquet(s"$path/corpus")
-      .repartition(nlist, col("__cell"))
-      .localCheckpoint(true)
-    pinned.write.mode("overwrite").partitionBy("__cell").parquet(s"$path/corpus")
-    val after = graft.sources.Partitioned.footerRowCount(
-      spark, s"$path/corpus")
-    require(after == before,
-      s"compaction changed the corpus row set: $before -> $after rows")
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    Partitioned.compactInPlace(spark, s"$path/corpus",
+      spark.read.parquet(s"$path/corpus"), "__cell")
 
   /** Delete vectors from a persisted index — the erasure op for the
     * vector store (the dedup indexes' `deleteFromIndex` contract): the
@@ -445,30 +430,17 @@ object Ivf {
       .select(col("__cid"), col("__cell"))
       .localCheckpoint()
     val touched = del.select(col("__cell")).distinct()
-      .collect().map(_.getInt(0)).toSet
+      .collect().map(_.getInt(0)).toSeq
     if (touched.isEmpty) return 0L
-    val stored = spark.read.parquet(s"$path/corpus")
-      .filter(col("__cell").isin(touched.toSeq.map(Int.box): _*))
+    val kept = spark.read.parquet(s"$path/corpus")
+      .filter(col("__cell").isin(touched.map(Int.box): _*))
+      .join(del.select(col("__cid")), Seq("__cid"), "left_anti")
     // whole cell directories are read: pre-image count from footers
     // (a missing cell dir counts zero)
-    val before = touched.toSeq.map(c =>
-      graft.sources.Partitioned.footerRowCount(
-        spark, s"$path/corpus/__cell=$c")).sum
-    // materialize survivors BEFORE dropping the directories they read
-    val kept = stored
-      .join(del.select(col("__cid")), Seq("__cid"), "left_anti")
-      .repartition(math.max(touched.size, 1), col("__cell"))
-      .localCheckpoint(true)
-    val after = kept.count()
-    val fs = new org.apache.hadoop.fs.Path(s"$path/corpus")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.foreach { c =>
-      val dir = new org.apache.hadoop.fs.Path(s"$path/corpus/__cell=$c")
-      if (fs.exists(dir)) fs.delete(dir, true)
-    }
-    if (after > 0)
-      kept.write.mode("append").partitionBy("__cell").parquet(s"$path/corpus")
-    before - after
+    val before = touched.map(c =>
+      Partitioned.footerRowCount(spark, s"$path/corpus/__cell=$c")).sum
+    before - Partitioned.replacePartitions(spark, s"$path/corpus",
+      touched.map(c => s"__cell=$c"), kept, "__cell")
   }
 
   /** Per-cell row counts of a persisted index — the drift telemetry for
@@ -498,7 +470,7 @@ object Ivf {
     */
   def imbalanceFactor(
       spark: org.apache.spark.sql.SparkSession, path: String): Double = {
-    val nlist = graft.sources.Partitioned.footerRowCount(
+    val nlist = Partitioned.footerRowCount(
       spark, s"$path/centroids")
     val r = cellStats(spark, path)
       .agg(sum(col("n") * col("n")).as("ss"), sum(col("n")).as("s")).head()

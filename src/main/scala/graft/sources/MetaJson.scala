@@ -23,11 +23,6 @@ object MetaJson {
     try out.write(body.getBytes("UTF-8")) finally out.close()
   }
 
-  def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   def read(spark: SparkSession, path: String): Map[String, Long] = {
     import org.json4s._
     val p = new org.apache.hadoop.fs.Path(path)

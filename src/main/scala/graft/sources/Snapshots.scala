@@ -84,11 +84,8 @@ object Snapshots {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Delete the whole table (fresh-build convenience). */
-  def drop(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = fs(spark, path)
-    if (f.exists(p)) f.delete(p, true)
-  }
+  def drop(spark: SparkSession, path: String): Unit =
+    Partitioned.deleteTree(spark, path)
 
   /** All committed versions at `path`, ascending (empty if none). */
   def versions(spark: SparkSession, path: String): Seq[Int] = {

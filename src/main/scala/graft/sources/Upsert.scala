@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one ids-only base scan (two columns), one join of
   * |updates| keys, then a rewrite confined to touched partitions
-  * (drop-then-append — the deleteFromIndex device: a partition drained
-  * by moves vanishes instead of keeping stale files; untouched
-  * partition directories stay byte-identical). Update batches are small
+  * ([[Partitioned.replacePartitions]]: a partition drained by moves
+  * vanishes instead of keeping stale files; untouched partition
+  * directories stay byte-identical). Update batches are small
   * relative to the table by nature, so the rewrite is O(touched), not
   * O(table). Idempotent: re-applying the same batch replaces rows with
   * identical content and inserts nothing.
@@ -79,9 +79,9 @@ object Upsert {
       .distinct().collect().map(_.getString(0)).toSet
     if (touched.isEmpty) return (0L, 0L)
     // touched partitions: survivors (base minus updated keys) + the
-    // update rows — materialized BEFORE the directories are dropped.
-    // The null-partition disjunct stays separate so the named-value
-    // isin can still prune partitions.
+    // update rows, replacing the touched directories. The null-partition
+    // disjunct stays separate so the named-value isin can still prune
+    // partitions.
     val keepNamed = col(partCol).cast("string")
       .isin((touched - DefaultPart).toSeq: _*)
     val keepFilter =
@@ -90,20 +90,14 @@ object Upsert {
     val kept = spark.read.parquet(path)
       .filter(keepFilter)
       .join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
-    val out = kept.unionByName(updates.select(kept.columns.map(col): _*))
-      .repartition(math.max(touched.size, 1), col(partCol))
-      .localCheckpoint(true)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the default-partition dir name is written literally, not escaped
     val escCol = ExternalCatalogUtils.escapePathName(partCol)
-    touched.foreach { p =>
-      // the default-partition dir name is written literally, not escaped
-      val escVal =
-        if (p == DefaultPart) p else ExternalCatalogUtils.escapePathName(p)
-      val dir = new org.apache.hadoop.fs.Path(s"$path/$escCol=$escVal")
-      if (fs.exists(dir)) fs.delete(dir, true)
+    val partDirs = touched.toSeq.map { p =>
+      if (p == DefaultPart) s"$escCol=$p"
+      else s"$escCol=${ExternalCatalogUtils.escapePathName(p)}"
     }
-    out.write.mode("append").partitionBy(partCol).parquet(path)
+    Partitioned.replacePartitions(spark, path, partDirs,
+      kept.unionByName(updates.select(kept.columns.map(col): _*)), partCol)
     (updated, inserted)
   }
 }

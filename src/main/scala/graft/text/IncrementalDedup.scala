@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.sources.Partitioned
 
@@ -48,20 +49,22 @@ object IncrementalDedup {
 
   private def hashesPath(path: String) = s"$path/hashes"
 
+  /** Every index read carries this EXPLICIT schema (the
+    * IncrementalNearDup device): with a plain file list Spark otherwise
+    * infers the schema from parquet footers driver-side — O(files) at
+    * any scale.
+    */
+  private val HashSchema = StructType(Seq(StructField("__h", StringType)))
+
   /** True iff an index has been written at `path`. */
-  def indexExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(hashesPath(path))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def indexExists(spark: SparkSession, path: String): Boolean =
+    Partitioned.exists(spark, hashesPath(path))
 
   /** Delete the index at `path` (fresh-build convenience for tests and
     * re-runs; a production retrain writes to a new path and swaps).
     */
-  def dropIndex(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
+  def dropIndex(spark: SparkSession, path: String): Unit =
+    Partitioned.deleteTree(spark, path)
 
   /** Compact the index: rewrite the accumulated per-batch append files
     * into O(1) files per bucket (optionally re-bucketing to a new
@@ -70,34 +73,17 @@ object IncrementalDedup {
     * every subsequent batch pays O(N · buckets) opens; compaction
     * restores O(buckets). Semantics-free by construction: the hash SET
     * is unchanged, so every future [[dedupIncremental]] decision is
-    * identical — the spec asserts it, and a require() guards the
-    * read-back count. The full snapshot is pinned (explicit file list)
-    * and materialized via localCheckpoint BEFORE the overwrite replaces
-    * the directory (the graph-append device), so a crash mid-write
-    * never reads its own partial output.
+    * identical — [[Partitioned.compactInPlace]] proves the row count
+    * unchanged.
     */
   def compactIndex(
       spark: SparkSession,
       path: String,
-      nBuckets: Int = DefaultBuckets): Unit = {
-    val snap = Partitioned.dataFiles(spark, hashesPath(path))
-    if (snap.isEmpty) return
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val hashSchema = StructType(Seq(StructField("__h", StringType)))
-    // row-conservation proof from parquet footers — exact, driver-side,
-    // no count() scans bracketing the rewrite
-    val before = graft.sources.Partitioned.footerRowCountFiles(spark, snap)
-    val all = spark.read.schema(hashSchema).parquet(snap: _*)
-      .select(col("__h"))
-      .withColumn("__b", pmod(crc32(col("__h")), lit(nBuckets)))
-      .repartition(nBuckets, col("__b"))
-      .localCheckpoint(true)
-    all.write.mode("overwrite").partitionBy("__b").parquet(hashesPath(path))
-    val after = graft.sources.Partitioned.footerRowCount(
-      spark, hashesPath(path))
-    require(after == before,
-      s"compaction changed the hash set: $before -> $after rows")
-  }
+      nBuckets: Int = DefaultBuckets): Unit =
+    Partitioned.compactInPlace(spark, hashesPath(path),
+      spark.read.schema(HashSchema).parquet(hashesPath(path))
+        .select(col("__h"), pmod(crc32(col("__h")), lit(nBuckets)).as("__b")),
+      "__b")
 
   /** Delete a document set's content hashes from the persisted index —
     * the right-to-be-forgotten lifecycle op (GDPR erasure): a corpus
@@ -106,15 +92,13 @@ object IncrementalDedup {
     * re-submission would be silently dropped as a duplicate of a doc
     * that no longer exists. Only buckets containing a to-delete hash
     * are touched: the deletion set (hashes only, distinct-ed — erasure
-    * requests are small by nature) picks its buckets, the pruned
-    * snapshot is anti-joined and materialized, the touched bucket
-    * directories are dropped, and the survivors re-appended — a bucket
-    * deleted to empty simply disappears from the layout (dynamic
-    * partition overwrite would have left its stale files in place,
-    * which is why the rewrite is drop-then-append). Untouched buckets
-    * stay byte-identical. Returns the number of index rows removed.
-    * `nBuckets` must match the index's bucketing, the same caller
-    * contract as [[dedupIncremental]].
+    * requests are small by nature) picks its buckets, and
+    * [[Partitioned.replacePartitions]] rewrites those bucket directories
+    * with the pruned snapshot minus the deleted hashes — a bucket
+    * deleted to empty simply disappears from the layout. Untouched
+    * buckets stay byte-identical. Returns the number of index rows
+    * removed. `nBuckets` must match the index's bucketing, the same
+    * caller contract as [[dedupIncremental]].
     */
   def deleteFromIndex(
       spark: SparkSession,
@@ -124,40 +108,20 @@ object IncrementalDedup {
       nBuckets: Int = DefaultBuckets): Long = {
     val snap = Partitioned.dataFiles(spark, hashesPath(path))
     if (snap.isEmpty) return 0L
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val hashSchema = StructType(Seq(StructField("__h", StringType)))
     val del = docs.select(TextOps.contentHash(col(textCol)).as("__h")).distinct()
       .withColumn("__b", pmod(crc32(col("__h")), lit(nBuckets)))
       .localCheckpoint()
-    val touched = del.select(col("__b")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    if (touched.isEmpty) return 0L
-    val bucketOf = "__b=([0-9]+)".r
-    val touchedFiles = snap.filter(f =>
-      bucketOf.findFirstMatchIn(f).exists(m => touched.contains(m.group(1).toLong)))
+    val partDirs = del.select(col("__b")).distinct()
+      .collect().map(r => s"__b=${r.getLong(0)}").toSeq
+    val touchedFiles = Partitioned.filesIn(snap, partDirs)
     if (touchedFiles.isEmpty) return 0L
-    val resident = spark.read.schema(hashSchema).parquet(touchedFiles: _*)
+    val kept = spark.read.schema(HashSchema).parquet(touchedFiles: _*)
       .select(col("__h"))
       .withColumn("__b", pmod(crc32(col("__h")), lit(nBuckets)))
+      .join(del.select(col("__h")), Seq("__h"), "left_anti")
     // whole files are read, so the pre-image count is footer metadata
-    val before = graft.sources.Partitioned.footerRowCountFiles(
-      spark, touchedFiles)
-    // materialize the survivors BEFORE dropping the directories they
-    // read: the checkpoint is lazy and the count fills it, so every
-    // partition is pinned by one job before any directory goes
-    val kept = resident.join(del.select(col("__h")), Seq("__h"), "left_anti")
-      .repartition(math.max(touched.size, 1), col("__b"))
-      .localCheckpoint(eager = false)
-    val after = kept.count()
-    val fs = new org.apache.hadoop.fs.Path(hashesPath(path))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.foreach { b =>
-      val dir = new org.apache.hadoop.fs.Path(s"${hashesPath(path)}/__b=$b")
-      if (fs.exists(dir)) fs.delete(dir, true)
-    }
-    if (after > 0)
-      kept.write.mode("append").partitionBy("__b").parquet(hashesPath(path))
-    before - after
+    Partitioned.footerRowCountFiles(spark, touchedFiles) -
+      Partitioned.replacePartitions(spark, hashesPath(path), partDirs, kept, "__b")
   }
 
   /** Dedup one ingest batch against the persisted index at `path`,
@@ -196,16 +160,11 @@ object IncrementalDedup {
     // eliminating every survivor. A pinned file list keeps every
     // (re-)execution on the pre-append snapshot.
     val snapshot = Partitioned.dataFiles(spark, hashesPath(path))
-    // Snapshot reads carry an EXPLICIT schema (the IncrementalNearDup
-    // device): with a plain file list Spark otherwise infers the schema
-    // from parquet footers driver-side — O(files) at any scale.
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val hashSchema = StructType(Seq(StructField("__h", StringType)))
     val fresh =
       if (snapshot.nonEmpty)
         // ids/text never enter this join's index side — hash strings only
         keyed.join(
-          spark.read.schema(hashSchema).parquet(snapshot: _*).select(col("__h")),
+          spark.read.schema(HashSchema).parquet(snapshot: _*).select(col("__h")),
           Seq("__h"), "left_anti")
       else keyed
     // `__b` is a function of `__h`, so electing over (__b, __h) groups

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructField,
+  StructType}
 
 import graft.sources.Partitioned
 
@@ -78,6 +80,14 @@ object IncrementalNearDup {
   private def isBandFile(f: String) = f.contains("__side=b")
   private def isSigFile(f: String) = f.contains("__side=s")
 
+  /** The union schema both sides' state files share (band rows carry a
+    * null `__sig`, signature rows null band columns); ids are BIGINT.
+    */
+  private val StateSchema = StructType(Seq(
+    StructField("__id", LongType), StructField("__band", IntegerType),
+    StructField("__khash", StringType),
+    StructField("__sig", ArrayType(LongType))))
+
   /** The index's structural LSH parameters, persisted at `<path>/meta`
     * (the [[graft.similarity.Hnsw]] meta-file device) by the bootstrap
     * ingest. Signatures, band keys and bucket directories are all pure
@@ -93,7 +103,7 @@ object IncrementalNearDup {
       spark: SparkSession, path: String): Option[LshMeta] = {
     // driver-side JSON sidecar (graft.sources.MetaJson) — every ingest
     // batch consults the LSH parameters; no Spark job per consultation
-    if (!graft.sources.MetaJson.exists(spark, metaPath(path))) None
+    if (!Partitioned.exists(spark, metaPath(path))) None
     else {
       val m = graft.sources.MetaJson.read(spark, metaPath(path))
       Some(LshMeta(m("shingle_n").toInt, m("num_hashes").toInt,
@@ -107,69 +117,38 @@ object IncrementalNearDup {
       "bands" -> m.bands.toLong, "n_buckets" -> m.nBuckets.toLong))
 
   /** True iff an index has been written at `path`. */
-  def indexExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(statePath(path))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def indexExists(spark: SparkSession, path: String): Boolean =
+    Partitioned.exists(spark, statePath(path))
 
   /** Delete the index at `path` (fresh-build convenience; a production
     * retrain writes to a new path and swaps).
     */
-  def dropIndex(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
+  def dropIndex(spark: SparkSession, path: String): Unit =
+    Partitioned.deleteTree(spark, path)
 
   /** Compact the index: rewrite the accumulated per-batch append files
     * into O(1) files per `(__side, __b)` partition (optionally
     * re-bucketing — the [[IncrementalDedup.compactIndex]] contract for
-    * the two-sided band+signature layout). Row-set preserved exactly
-    * (require()-guarded), so every future probe decision is identical;
-    * the pinned snapshot is materialized via localCheckpoint before the
-    * overwrite replaces the directory.
+    * the two-sided band+signature layout). Row count preserved exactly
+    * ([[Partitioned.compactInPlace]]), so every future probe decision is
+    * identical.
     */
   def compactIndex(
       spark: SparkSession,
       path: String,
       nBuckets: Option[Int] = None): Unit = {
-    import org.apache.spark.sql.types._
     val meta = readMeta(spark, path)
     // target bucket count: explicit override > persisted > default —
     // never a caller default silently diverging from the index's layout
     val nb = nBuckets.orElse(meta.map(_.nBuckets)).getOrElse(DefaultBuckets)
-    val snap = Partitioned.dataFiles(spark, statePath(path))
-    if (snap.isEmpty) return
-    val bandSnap = snap.filter(isBandFile)
-    val sigSnap = snap.filter(isSigFile)
-    // the union-write schema: ids are BIGINT in every registered use;
-    // read sides separately (each side's files lack the partition cols)
-    val bandSchema = StructType(Seq(
-      StructField("__id", LongType), StructField("__band", IntegerType),
-      StructField("__khash", StringType),
-      StructField("__sig", ArrayType(LongType))))
-    val sigSchema = bandSchema
-    def side(files: Seq[String], schema: StructType, tag: String) =
-      if (files.isEmpty) None
-      else Some(spark.read.schema(schema).parquet(files: _*)
-        .withColumn("__side", lit(tag)))
-    val bands = side(bandSnap, bandSchema, "b")
-      .map(_.withColumn("__b", pmod(crc32(col("__khash")), lit(nb))))
-    val sigs = side(sigSnap, sigSchema, "s")
-      .map(_.withColumn("__b", pmod(crc32(col("__id").cast("string")), lit(nb))))
-    val all = (bands.toSeq ++ sigs.toSeq).reduce(_ unionAll _)
-    // row-conservation proof from parquet footers — exact, driver-side,
-    // no count() scans bracketing the rewrite
-    val before = graft.sources.Partitioned.footerRowCountFiles(spark, snap)
-    val pinned = all
-      .repartition(col("__side"), col("__b"))
-      .localCheckpoint(true)
-    pinned.write.mode("overwrite").partitionBy("__side", "__b")
-      .parquet(statePath(path))
-    val after = graft.sources.Partitioned.footerRowCount(
-      spark, statePath(path))
-    require(after == before,
-      s"compaction changed the index row set: $before -> $after rows")
+    // ids are BIGINT in every registered use; the directory read adds
+    // the `__side` partition column, and `__b` is recomputed per side
+    Partitioned.compactInPlace(spark, statePath(path),
+      spark.read.schema(StateSchema).parquet(statePath(path))
+        .withColumn("__b", when(col("__side") === "b",
+          pmod(crc32(col("__khash")), lit(nb)))
+          .otherwise(pmod(crc32(col("__id").cast("string")), lit(nb)))),
+      "__side", "__b")
     // a re-bucketing compact changes the layout future bucket-pruned
     // deletes navigate by — record it
     meta.foreach(m => if (m.nBuckets != nb)
@@ -262,52 +241,30 @@ object IncrementalNearDup {
       .map(_.getLong(1)).toSet
     val sigBuckets = bucketRows.filter(_.getString(0) == "s")
       .map(_.getLong(1)).toSet
-    val bucketOf = "__b=([0-9]+)".r
-    def touchedOf(files: Seq[String], buckets: Set[Long]) = files.filter(f =>
-      bucketOf.findFirstMatchIn(f).exists(m => buckets.contains(m.group(1).toLong)))
-    val touchedBand = touchedOf(snap.filter(isBandFile), bandBuckets)
-    val touchedSig = touchedOf(snap.filter(isSigFile), sigBuckets)
+    val bandDirs = bandBuckets.toSeq.map(b => s"__side=b/__b=$b")
+    val sigDirs = sigBuckets.toSeq.map(b => s"__side=s/__b=$b")
+    val touchedBand = Partitioned.filesIn(snap, bandDirs)
+    val touchedSig = Partitioned.filesIn(snap, sigDirs)
     if (touchedBand.isEmpty && touchedSig.isEmpty) return 0L
-    import org.apache.spark.sql.types._
-    val bandSchema = StructType(Seq(
-      StructField("__id", LongType), StructField("__band", IntegerType),
-      StructField("__khash", StringType),
-      StructField("__sig", ArrayType(LongType))))
     val delIds = delSigs.select(col("__id"))
     def keptSide(files: Seq[String], tag: String, bucket: Column) =
       if (files.isEmpty) None
-      else Some(spark.read.schema(bandSchema).parquet(files: _*)
+      else Some(spark.read.schema(StateSchema).parquet(files: _*)
         .join(delIds, Seq("__id"), "left_anti")
         .withColumn("__side", lit(tag))
         .withColumn("__b", bucket))
     val removedDocs = if (touchedSig.isEmpty) 0L
-      else spark.read.schema(bandSchema).parquet(touchedSig: _*)
+      else spark.read.schema(StateSchema).parquet(touchedSig: _*)
         .join(delIds, Seq("__id"), "left_semi")
         .select(col("__id")).distinct().count()
     val keptB = keptSide(touchedBand, "b",
       pmod(crc32(col("__khash")), lit(nBuckets)))
     val keptS = keptSide(touchedSig, "s",
       pmod(crc32(col("__id").cast("string")), lit(nBuckets)))
-    // materialize survivors BEFORE dropping the directories they read —
-    // both sides in ONE union checkpoint and ONE append write (the
-    // dedupIncremental single-append device: the __side partition
-    // directory separates them), instead of a checkpoint + write per side
-    val kept = (keptB.toSeq ++ keptS.toSeq).reduceOption(_ unionAll _)
-      .map(_.repartition(col("__side"), col("__b")).localCheckpoint(true))
-    val fs = new org.apache.hadoop.fs.Path(statePath(path))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dropDirs(tag: String, buckets: Set[Long]): Unit = buckets.foreach { b =>
-      val dir = new org.apache.hadoop.fs.Path(
-        s"${statePath(path)}/__side=$tag/__b=$b")
-      if (fs.exists(dir)) fs.delete(dir, true)
-    }
-    if (touchedBand.nonEmpty) dropDirs("b", bandBuckets)
-    if (touchedSig.nonEmpty) dropDirs("s", sigBuckets)
-    kept.foreach { k =>
-      if (!k.isEmpty)
-        k.write.mode("append").partitionBy("__side", "__b")
-          .parquet(statePath(path))
-    }
+    // both sides in ONE rewrite (the dedupIncremental single-append
+    // device: the __side partition directory separates them)
+    Partitioned.replacePartitions(spark, statePath(path), bandDirs ++ sigDirs,
+      (keptB.toSeq ++ keptS.toSeq).reduce(_ unionAll _), "__side", "__b")
     removedDocs
   }
 
@@ -471,7 +428,6 @@ object IncrementalNearDup {
     // schema: with a plain file list, Spark otherwise infers the schema
     // by reading parquet footers driver-side — ~2 s against a
     // 2×64-bucket index at bench SF, and O(files) at any scale.
-    import org.apache.spark.sql.types._
     val idType = sigs.schema("__id").dataType
     val bandSchema = StructType(Seq(
       StructField("__id", idType), StructField("__band", IntegerType),

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.{MetaJson, Partitioned}
+
 /** Persisted inverted index with term-bucket-pruned BM25 search — the
   * LEXICAL member of the persisted-index family (exact-hash, MinHash-LSH,
   * semantic, IVF, NSW, HNSW being the others): [[graft.text.Quality.bm25]]
@@ -144,25 +146,9 @@ object InvertedIndex {
     * same rows, same layout rule). Meta is untouched: counters don't
     * change when rows don't.
     */
-  def compactIndex(spark: SparkSession, path: String): Unit = {
-    val (_, _, nBuckets) = readMeta(spark, path)
-    // row-conservation proof from parquet footers: exact, driver-side,
-    // O(files) — the old shape paid two full count() scans around the
-    // rewrite, tripling the read volume of exactly the many-small-files
-    // state compaction exists to fix
-    val before = graft.sources.Partitioned.footerRowCount(
-      spark, postingsPath(path))
-    if (before == 0L) return
-    // materialize BEFORE overwriting the directory being read
-    val pinned = spark.read.parquet(postingsPath(path))
-      .repartition(nBuckets, col("__b"))
-      .localCheckpoint(true)
-    pinned.write.mode("overwrite").partitionBy("__b").parquet(postingsPath(path))
-    val after = graft.sources.Partitioned.footerRowCount(
-      spark, postingsPath(path))
-    require(after == before,
-      s"compaction changed the posting set: $before -> $after rows")
-  }
+  def compactIndex(spark: SparkSession, path: String): Unit =
+    Partitioned.compactInPlace(spark, postingsPath(path),
+      spark.read.parquet(postingsPath(path)), "__b")
 
   /** Append a batch of NEW docs (ids must be absent from the index —
     * re-appending a doc would double its postings; enforce upstream with
@@ -216,59 +202,28 @@ object InvertedIndex {
       .agg(count(lit(1)).cast("long"), sum(col("__dl")).cast("long")).head()
     val removed = gone.getLong(0)
     if (removed == 0L) return 0L
-    val kept = touched.join(delIds, Seq("__id"), "left_anti")
-      .repartition(col("__b"))
-      .localCheckpoint(true) // pinned before its source dirs are dropped
-    val fs = new org.apache.hadoop.fs.Path(postingsPath(path))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    buckets.foreach { b =>
-      val dir = new org.apache.hadoop.fs.Path(s"${postingsPath(path)}/__b=$b")
-      if (fs.exists(dir)) fs.delete(dir, true)
-    }
-    if (!kept.isEmpty)
-      kept.write.mode("append").partitionBy("__b").parquet(postingsPath(path))
+    Partitioned.replacePartitions(spark, postingsPath(path),
+      buckets.toSeq.map(b => s"__b=$b"),
+      touched.join(delIds, Seq("__id"), "left_anti"), "__b")
     writeMeta(spark, path, n - removed, totalDl - gone.getLong(1), nBuckets)
     removed
   }
 
   /** Meta counters are KB-scale bookkeeping, written and read
-    * driver-side (the Snapshots `_files.json` discipline) — the old
-    * one-row parquet shape paid a Spark job per write and per read,
-    * and an index lifecycle touches meta on every build/append/delete
-    * and every search.
+    * driver-side as a [[MetaJson]] sidecar — the old one-row parquet
+    * shape paid a Spark job per write and per read, and an index
+    * lifecycle touches meta on every build/append/delete and every
+    * search.
     */
   private def writeMeta(
       spark: SparkSession, path: String,
-      nDocs: Long, totalDl: Long, nBuckets: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(metaPath(path))
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = f.create(p, true)
-    try out.write(
-      s"""{"n_docs":$nDocs,"total_dl":$totalDl,"n_buckets":$nBuckets}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-  }
+      nDocs: Long, totalDl: Long, nBuckets: Int): Unit =
+    MetaJson.write(spark, metaPath(path), Seq(
+      "n_docs" -> nDocs, "total_dl" -> totalDl, "n_buckets" -> nBuckets.toLong))
 
   private def readMeta(spark: SparkSession, path: String): (Long, Long, Int) = {
-    import org.json4s._
-    val p = new org.apache.hadoop.fs.Path(metaPath(path))
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = f.open(p)
-    val txt =
-      try {
-        val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        new String(bytes, "UTF-8")
-      } finally in.close()
-    org.json4s.jackson.JsonMethods.parse(txt) match {
-      case JObject(fields) =>
-        val m = fields.toMap
-        (m("n_docs").asInstanceOf[JInt].num.toLong,
-          m("total_dl").asInstanceOf[JInt].num.toLong,
-          m("n_buckets").asInstanceOf[JInt].num.toInt)
-      case other => throw new IllegalStateException(
-        s"malformed index meta at $path: $other")
-    }
+    val m = MetaJson.read(spark, metaPath(path))
+    (m("n_docs"), m("total_dl"), m("n_buckets").toInt)
   }
 
   /** Bucket of `term` under the index's crc32 rule — driver-side twin of
@@ -282,7 +237,7 @@ object InvertedIndex {
 
   /** The pruned postings scan for a term set: a partition filter on the
     * terms' buckets (provable with
-    * [[graft.sources.Partitioned.prunedPartitionCount]]) followed by the
+    * [[Partitioned.prunedPartitionCount]]) followed by the
     * exact term filter. Exposed so callers can audit the pruning.
     */
   def prunedPostings(

@@ -103,9 +103,9 @@ class InvertedIndexSpec extends SparkSpec {
       "text", path)
     val terms = Seq("hash", "join", "scan", "shuffles")
     val before = scores(InvertedIndex.scoreBm25(spark, path, terms))
-    val filesBefore = graft.sources.Partitioned.fileCount(s"$path/postings")
+    val filesBefore = graft.sources.Partitioned.dataFiles(spark, s"$path/postings").size
     InvertedIndex.compactIndex(spark, path)
-    val filesAfter = graft.sources.Partitioned.fileCount(s"$path/postings")
+    val filesAfter = graft.sources.Partitioned.dataFiles(spark, s"$path/postings").size
     assert(filesAfter < filesBefore,
       s"compaction did not shrink the layout: $filesBefore -> $filesAfter")
     // bit-identical scores: same rows, same meta, same float-op order

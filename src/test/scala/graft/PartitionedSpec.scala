@@ -6,6 +6,7 @@ import graft.sources.Partitioned
 
 class PartitionedSpec extends SparkSpec {
 
+
   test("writeByKey + filtered scan prunes to the selected directories") {
     import spark.implicits._
     val df = (1 to 120).map(i => (i.toLong, s"2024-${"%02d".format(i % 12 + 1)}", i * 2.0))
@@ -62,11 +63,100 @@ class PartitionedSpec extends SparkSpec {
     val dst = Scratch.sub("compact_dst")
     df.repartition(16).write.mode("overwrite").partitionBy("k").parquet(frag)
     Partitioned.compact(spark, frag, dst, "k")
-    assert(Partitioned.fileCount(frag) >= 16)
-    assert(Partitioned.fileCount(dst) <= 3) // one file per key directory
+    assert(Partitioned.dataFiles(spark, frag).size >= 16)
+    assert(Partitioned.dataFiles(spark, dst).size <= 3) // one file per key directory
     val a = Partitioned.scan(spark, frag).collect().map(_.toString).sorted
     val b = Partitioned.scan(spark, dst).collect().map(_.toString).sorted
     assert(a.sameElements(b))
+  }
+
+  /** A fresh layout of `k` directories `a`..`d` holding ids 0 until 40
+    * (`id % 4` picks the directory), several files each.
+    */
+  private def fourDirs(): String = {
+    import spark.implicits._
+    val path = Scratch.sub(s"replace_${java.util.UUID.randomUUID()}")
+    (0L until 40L).map(i => (i, Seq("a", "b", "c", "d")((i % 4).toInt)))
+      .toDF("id", "k").repartition(3)
+      .write.mode("overwrite").partitionBy("k").parquet(path)
+    path
+  }
+
+  /** Name and length of every data file under `dir`. */
+  private def filesOf(dir: String): Map[String, Long] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Partitioned.dataFiles(spark, dir).map { f =>
+      f -> fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen
+    }.toMap
+  }
+
+  private def rowsOf(path: String): Set[(Long, String)] =
+    spark.read.parquet(path).collect()
+      .map(r => (r.getLong(0), r.getAs[String]("k"))).toSet
+
+  test("replacePartitions rewrites the directories its survivors read; drained ones vanish") {
+    val path = fourDirs()
+    val untouched = filesOf(s"$path/k=c") ++ filesOf(s"$path/k=d")
+    // erase every `b` row and the even `a` rows, reading the very
+    // directories being replaced
+    val kept = spark.read.parquet(path)
+      .filter(col("k").isin("a", "b"))
+      .filter(col("k") === "a" && col("id") % 8 =!= 0)
+    val n = Partitioned.replacePartitions(spark, path, Seq("k=a", "k=b"), kept, "k")
+    val expected = (0L until 40L).map(i => (i, Seq("a", "b", "c", "d")((i % 4).toInt)))
+      .filter { case (i, k) => k == "c" || k == "d" || (k == "a" && i % 8 != 0) }.toSet
+    assert(rowsOf(path) == expected)
+    assert(n == 5L, s"survivor count $n")
+    assert(!new java.io.File(s"$path/k=b").exists(), "drained directory left behind")
+    assert(filesOf(s"$path/k=c") ++ filesOf(s"$path/k=d") == untouched,
+      "an untouched directory was rewritten")
+    // nothing survives: the directories go and nothing is appended
+    val none = spark.read.parquet(path).filter(col("k") === "a").filter(lit(false))
+    assert(Partitioned.replacePartitions(spark, path, Seq("k=a"), none, "k") == 0L)
+    assert(!new java.io.File(s"$path/k=a").exists())
+    assert(rowsOf(path) == expected.filter(_._2 != "a"))
+  }
+
+  test("replacePartitions pins its survivors with one count before the append's write") {
+    val path = fourDirs()
+    val kept = spark.read.parquet(path).filter(col("k") === "a" && col("id") > 10)
+    val isWrite = jobsDuring(Partitioned.replacePartitions(spark, path, Seq("k=a"), kept, "k"))
+      ._2.map(_.plan.contains("InsertIntoHadoopFsRelationCommand"))
+    assert(isWrite.contains(true), "no append write ran")
+    // adaptive execution runs the checkpoint's shuffle map stage as a job
+    // when the checkpoint is taken; the count is then the one job that
+    // fills the checkpoint. An eager checkpoint, or a Dataset count with
+    // its own aggregate exchange, adds a job.
+    assert(isWrite.indexOf(true) == 2, s"jobs before the write: $isWrite")
+  }
+
+  test("compactInPlace leaves one file per directory and every row") {
+    import spark.implicits._
+    val path = Scratch.sub(s"compact_in_place_${java.util.UUID.randomUUID()}")
+    val df = (0L until 60L).map(i => (i, s"k${i % 3}")).toDF("id", "k")
+    (1 to 4).foreach(_ => df.repartition(4).write.mode("append").partitionBy("k").parquet(path))
+    val before = spark.read.parquet(path).collect().map(_.toString).sorted
+    assert(Partitioned.dataFiles(spark, path).size >= 12)
+    Partitioned.compactInPlace(spark, path, spark.read.parquet(path), "k")
+    val files = Partitioned.dataFiles(spark, path)
+    assert(files.size == 3, s"files after compaction: $files")
+    assert(Seq("k0", "k1", "k2").forall(k => files.count(_.contains(s"/k=$k/")) == 1))
+    assert(spark.read.parquet(path).collect().map(_.toString).sorted.sameElements(before))
+    // an empty or absent directory is left alone and the frame never built
+    Partitioned.compactInPlace(spark, s"$path-absent", sys.error("frame built"), "k")
+  }
+
+  test("compactInPlace refuses a frame that loses a row, naming the directory") {
+    import spark.implicits._
+    val path = Scratch.sub(s"compact_lossy_${java.util.UUID.randomUUID()}")
+    (0L until 30L).map(i => (i, s"k${i % 3}")).toDF("id", "k")
+      .write.mode("overwrite").partitionBy("k").parquet(path)
+    val e = intercept[IllegalArgumentException] {
+      Partitioned.compactInPlace(spark, path,
+        spark.read.parquet(path).filter(col("id") =!= 7L), "k")
+    }
+    assert(e.getMessage.contains(path) && e.getMessage.contains("30 -> 29"), e.getMessage)
   }
 
   test("Upsert.mergeInto: update, insert, cross-partition move; drained dirs vanish; idempotent") {

@@ -1,6 +1,14 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch,
+  TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession + long-format fixture helpers. */
@@ -16,6 +24,63 @@ trait SparkSpec extends AnyFunSuite {
     */
   def freshCkpt(): String =
     s"${Scratch.sub("ckpt-test")}/${java.util.UUID.randomUUID()}"
+
+  /** One job: the physical plan of the SQL execution that launched it
+    * ("" for a job outside any SQL execution, a parquet schema
+    * inference), whether one of its stages scans files, and the input
+    * records its tasks read.
+    */
+  case class Job(plan: String, scansFiles: Boolean, records: Long)
+
+  /** `block`'s result and the jobs started while it ran, in start order.
+    * A canary job closes the window: listener events arrive in order, so
+    * once it is seen every earlier job and task has been recorded.
+    */
+  def jobsDuring[T](block: => T): (T, Seq[Job]) = {
+    val canary = "jobs-during-canary"
+    val seen = new CountDownLatch(1)
+    val plans = new ConcurrentHashMap[Long, String]()
+    val stageJob = new ConcurrentHashMap[Int, Int]()
+    val records = new ConcurrentHashMap[Int, Long]()
+    val scans = ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new ConcurrentLinkedQueue[(Int, Option[Long])]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          plans.put(x.executionId, x.physicalPlanDescription): Unit
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.job.description") == canary)) seen.countDown()
+        else {
+          e.stageInfos.foreach { st =>
+            stageJob.put(st.stageId, e.jobId)
+            if (st.rddInfos.exists(_.name == "FileScanRDD")) scans.add(e.jobId)
+          }
+          records.put(e.jobId, 0L)
+          jobs.add((e.jobId, props.flatMap(p =>
+            Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong))): Unit
+        }
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(stageJob.get(e.stageId)).foreach { j =>
+          records.merge(j, e.taskMetrics.inputMetrics.recordsRead, _ + _): Unit
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val result = try {
+      val r = block
+      spark.sparkContext.setJobDescription(canary)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(seen.await(60, TimeUnit.SECONDS), "listener never saw the canary job")
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    (result, jobs.asScala.toSeq.map { case (id, exec) =>
+      Job(exec.map(plans.getOrDefault(_, "")).getOrElse(""), scans.contains(id), records.get(id))
+    })
+  }
 
   /** One or more named series → long frame (series_id, t, value). */
   def seriesDf(series: (String, Seq[Double])*): DataFrame = {
