@@ -529,8 +529,7 @@ object DedupQueries {
         // two-run bench protocol) must never race on the index — a
         // foreign writeIndex under a timed read would corrupt the
         // hash/timing
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_ivf_index_$tag"
+        val path = Scratch.forInput("ivf_index", dir)
         Ivf.writeIndex(emb, "embedding", "vec_id", path, nlist = 8, seed = 7L)
         // FULL-oracle thunk: replay probe + re-rank from what the index
         // actually persisted (the x29/x40 pattern)
@@ -567,9 +566,8 @@ object DedupQueries {
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
         val queries = emb.filter(col("vec_id") < 20)
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val nswPath = s"${Scratch.dir}/graft_nsw_eval_$tag"
-        val hnswPath = s"${Scratch.dir}/graft_hnsw_eval_$tag"
+        val nswPath = Scratch.forInput("nsw_eval", dir)
+        val hnswPath = Scratch.forInput("hnsw_eval", dir)
         // The five tier builds (exact baseline, IVF quantizer, PQ
         // codebooks, NSW graph, HNSW graph) are INDEPENDENT — overlap
         // them from a driver pool (guide §2.6: actions are only
@@ -760,8 +758,7 @@ object DedupQueries {
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
         // per-pid scratch for the same cross-worktree reason as x18
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_ivf_append_$tag"
+        val path = Scratch.forInput("ivf_append", dir)
         Ivf.writeIndex(emb.filter(col("vec_id") % 2 === 0), "embedding",
           "vec_id", path, nlist = 8, seed = 7L)
         Ivf.appendToIndex(emb.filter(col("vec_id") % 2 =!= 0), "embedding",
@@ -958,8 +955,7 @@ object DedupQueries {
       "x32_incremental_dedup",
       (s, dir) => {
         // per-sf scratch path, same cross-run isolation reasoning as x18
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_dedup_index_$tag"
+        val path = Scratch.forInput("dedup_index", dir)
         IncrementalDedup.dropIndex(s, path)
         val docs = Tables.documents(s, dir)
         // nBuckets sized to the bench corpus (the x75 capacity-sizing
@@ -1092,8 +1088,7 @@ object DedupQueries {
       "x38_ann_ivf_sq8",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_ivf_sq8_$tag"
+        val path = Scratch.forInput("ivf_sq8", dir)
         Ivf.writeIndex(emb, "embedding", "vec_id", path, nlist = 8, seed = 7L,
           quantize = true)
         Ivf.cosineTopKIndexed(s, path, emb.filter(col("vec_id") < 20),
@@ -1170,8 +1165,7 @@ object DedupQueries {
       "x40_ann_ivf_pq",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_ivf_pq_$tag"
+        val path = Scratch.forInput("ivf_pq", dir)
         Ivf.writeIndex(emb, "embedding", "vec_id", path, nlist = 8, seed = 7L,
           pqM = 8, pqK = 16)
         // the oracle replays what the index actually persisted
@@ -1501,8 +1495,7 @@ object DedupQueries {
         import s.implicits._
         import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_dedup_stream_$tag"
+        val path = Scratch.forInput("dedup_stream", dir)
         IncrementalDedup.dropIndex(s, path)
         val docs = Tables.documents(s, dir)
           .select(col("doc_id").cast("long"), col("text"))
@@ -1578,8 +1571,7 @@ object DedupQueries {
       "x127_compacted_ingest",
       (s, dir) => {
         import s.implicits._
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_dedup_compact_$tag"
+        val path = Scratch.forInput("dedup_compact", dir)
         IncrementalDedup.dropIndex(s, path)
         val docs = Tables.documents(s, dir)
         def batch(m: Long, nb: Int) = IncrementalDedup.dedupIncremental(
@@ -1653,8 +1645,7 @@ object DedupQueries {
       "x136_index_delete",
       (s, dir) => {
         import s.implicits._
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_dedup_delete_$tag"
+        val path = Scratch.forInput("dedup_delete", dir)
         IncrementalDedup.dropIndex(s, path)
         val docs = Tables.documents(s, dir)
         def batch(m: Long) = IncrementalDedup.dedupIncremental(
@@ -1732,8 +1723,7 @@ object DedupQueries {
       "x128_ann_compacted",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_ivf_compact_$tag"
+        val path = Scratch.forInput("ivf_compact", dir)
         def nFiles: Int = Partitioned.dataFiles(s, s"$path/corpus").size
         Ivf.writeIndex(emb.filter(col("vec_id") % 3 === 0), "embedding",
           "vec_id", path, nlist = 8, seed = 7L)
@@ -1783,8 +1773,7 @@ object DedupQueries {
       "x135_ann_filtered",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_ivf_filter_$tag"
+        val path = Scratch.forInput("ivf_filter", dir)
         Ivf.writeIndex(emb, "embedding", "vec_id", path, nlist = 8, seed = 7L)
         val allowed = emb.filter(col("label") <= 2).select(col("vec_id"))
         Ivf.cosineTopKIndexed(s, path, emb.filter(col("vec_id") < 20),
@@ -1828,8 +1817,7 @@ object DedupQueries {
       "x138_ann_deleted",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_ivf_delete_$tag"
+        val path = Scratch.forInput("ivf_delete", dir)
         Ivf.writeIndex(emb, "embedding", "vec_id", path, nlist = 8, seed = 7L)
         val toErase = emb.filter(col("vec_id") % 7 === 0)
         val removed = Ivf.deleteFromIndex(s, path, toErase, "vec_id", "embedding")
@@ -1880,8 +1868,7 @@ object DedupQueries {
         import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val emb = Tables.embeddings(s, dir)
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_ivf_stream_$tag"
+        val path = Scratch.forInput("ivf_stream", dir)
         Ivf.writeIndex(emb.filter(col("vec_id") % 3 === 0), "embedding",
           "vec_id", path, nlist = 8, seed = 7L)
         val rest = emb.filter(col("vec_id") % 3 =!= 0)
@@ -2078,8 +2065,7 @@ object DedupQueries {
     QueryDef(
       "x75_incremental_neardup",
       (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_neardup_index_$tag"
+        val path = Scratch.forInput("neardup_index", dir)
         IncrementalNearDup.dropIndex(s, path)
         val docs = Tables.documents(s, dir)
           .select(col("doc_id").cast("long").as("doc_id"), col("text"))
@@ -2193,8 +2179,7 @@ object DedupQueries {
       "x137_neardup_delete",
       (s, dir) => {
         import s.implicits._
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_neardup_delete_$tag"
+        val path = Scratch.forInput("neardup_delete", dir)
         IncrementalNearDup.dropIndex(s, path)
         // all three passes (bootstrap, erasure, re-ingest) read the
         // family's compute-once signature store — zero re-sketching
@@ -2318,8 +2303,7 @@ object DedupQueries {
     QueryDef(
       "x124_incremental_semdedup",
       (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_semdedup_index_$tag"
+        val path = Scratch.forInput("semdedup_index", dir)
         IncrementalSemDedup.dropIndex(s, path)
         val emb = Tables.embeddings(s, dir)
         val b1 = IncrementalSemDedup.dedupIncremental(
@@ -2454,8 +2438,7 @@ object DedupQueries {
         import s.implicits._
         import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_semdedup_stream_$tag"
+        val path = Scratch.forInput("semdedup_stream", dir)
         IncrementalSemDedup.dropIndex(s, path)
         val vecs = Tables.embeddings(s, dir)
           .select(col("vec_id").cast("long"), col("embedding"))
@@ -2613,8 +2596,7 @@ object DedupQueries {
         import s.implicits._
         import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_neardup_stream_$tag"
+        val path = Scratch.forInput("neardup_stream", dir)
         IncrementalNearDup.dropIndex(s, path)
         val docsDf = Tables.documents(s, dir)
           .select(col("doc_id").cast("long"), col("text"))

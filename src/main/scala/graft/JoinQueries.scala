@@ -191,7 +191,7 @@ object JoinQueries {
       "x84_bucketed_join",
       (s, dir) => {
         import graft.sources.Bucketed
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
+        val tag = Scratch.tag(dir)
         val ot = Bucketed.writeBucketed(
           Tables.orders(s, dir), s"orders_b_$tag", "o_custkey", 16)
         val ct = Bucketed.writeBucketed(
@@ -245,8 +245,7 @@ object JoinQueries {
       "x86_partition_prune",
       (s, dir) => {
         import graft.sources.Partitioned
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val path = s"${Scratch.dir}/graft_orders_bymonth_$tag"
+        val path = Scratch.forInput("orders_bymonth", dir)
         Partitioned.writeByKey(
           Tables.orders(s, dir)
             .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM")),
@@ -292,9 +291,8 @@ object JoinQueries {
       "x129_zorder_skip",
       (s, dir) => {
         import graft.operators.ZOrder
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val zPath = s"${Scratch.dir}/graft_zorder_$tag"
-        val linPath = s"${Scratch.dir}/graft_zlinear_$tag"
+        val zPath = Scratch.forInput("zorder", dir)
+        val linPath = Scratch.forInput("zlinear", dir)
         val li = Tables.lineitem(s, dir).select(
           col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_quantity"), col("l_returnflag"))
@@ -443,8 +441,7 @@ object JoinQueries {
       "x141_upsert_corpus",
       (s, dir) => {
         import graft.sources.Upsert
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val path = s"${Scratch.dir}/graft_upsert_$tag"
+        val path = Scratch.forInput("upsert", dir)
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("text"), col("source"))
         docs.repartition(col("source"))
@@ -521,8 +518,7 @@ object JoinQueries {
         import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         import graft.sources.Upsert
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val path = s"${Scratch.dir}/graft_cdc_$tag"
+        val path = Scratch.forInput("cdc", dir)
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("text"), col("source"))
         docs.repartition(col("source"))
@@ -599,8 +595,7 @@ object JoinQueries {
       "x144_snapshot_reads",
       (s, dir) => {
         import graft.sources.Snapshots
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val path = s"${Scratch.dir}/graft_snap_$tag"
+        val path = Scratch.forInput("snap", dir)
         Snapshots.drop(s, path)
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("text"))
@@ -685,8 +680,7 @@ object JoinQueries {
         import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         import graft.sources.Snapshots
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val path = s"${Scratch.dir}/graft_snap_stream_$tag"
+        val path = Scratch.forInput("snap_stream", dir)
         Snapshots.drop(s, path)
         val docs = Tables.documents(s, dir)
           .select(col("doc_id").cast("long"), col("text"))
@@ -773,9 +767,8 @@ object JoinQueries {
       (s, dir) => {
         import graft.operators.DeltaRollup
         import graft.sources.Snapshots
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val spath = s"${Scratch.dir}/graft_snapcdc_$tag"
-        val rpath = s"${Scratch.dir}/graft_snapcdc_mv_$tag"
+        val spath = Scratch.forInput("snapcdc", dir)
+        val rpath = Scratch.forInput("snapcdc_mv", dir)
         Snapshots.drop(s, spath)
         DeltaRollup.drop(s, rpath)
         val docs = Tables.documents(s, dir)
@@ -849,8 +842,7 @@ object JoinQueries {
       "x152_snapshot_data_skipping",
       (s, dir) => {
         import graft.sources.Snapshots
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val path = s"${Scratch.dir}/graft_snap_skip_$tag"
+        val path = Scratch.forInput("snap_skip", dir)
         Snapshots.drop(s, path)
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
         Snapshots.append(
@@ -888,8 +880,7 @@ object JoinQueries {
       "x151_snapshot_schema_evolution",
       (s, dir) => {
         import graft.sources.Snapshots
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val path = s"${Scratch.dir}/graft_snap_evolve_$tag"
+        val path = Scratch.forInput("snap_evolve", dir)
         Snapshots.drop(s, path)
         val docs = Tables.documents(s, dir)
         Snapshots.append(
@@ -956,9 +947,8 @@ object JoinQueries {
       "x89_compaction",
       (s, dir) => {
         import graft.sources.Partitioned
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val frag = s"${Scratch.dir}/graft_frag_$tag"
-        val compacted = s"${Scratch.dir}/graft_compacted_$tag"
+        val frag = Scratch.forInput("frag", dir)
+        val compacted = Scratch.forInput("compacted", dir)
         Tables.events(s, dir)
           .select(col("event_id"), col("event_type"), col("value"))
           .repartition(32) // simulate 32 ingest writer tasks
@@ -992,21 +982,19 @@ object JoinQueries {
     QueryDef(
       "x90_idempotent_overwrite",
       (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val path = s"${Scratch.dir}/graft_dynover_$tag"
+        val path = Scratch.forInput("dynover", dir)
         val ev = Tables.events(s, dir)
           .select(col("event_id"), col("event_type"), col("value"))
         ev.repartition(col("event_type"))
           .write.mode("overwrite").partitionBy("event_type").parquet(path)
-        val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode")
-        try {
-          s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-          (1 to 2).foreach { _ => // the retried micro-batch
-            ev.filter(col("event_type") === "click")
-              .repartition(col("event_type"))
-              .write.mode("overwrite").partitionBy("event_type").parquet(path)
-          }
-        } finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        // the mode is a writer option, not a session conf: a query
+        // starting beside this one keeps the session's static overwrite
+        (1 to 2).foreach { _ => // the retried micro-batch
+          ev.filter(col("event_type") === "click")
+            .repartition(col("event_type"))
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy("event_type").parquet(path)
+        }
         // both counts from parquet footers: the table just written, and
         // the source table `ev` projects without a filter
         val (n, n0) = (graft.sources.Partitioned.footerRowCount(s, path),
@@ -1036,8 +1024,7 @@ object JoinQueries {
     QueryDef(
       "x96_format_roundtrip",
       (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val base = s"${Scratch.dir}/graft_fmt_$tag"
+        val base = Scratch.forInput("fmt", dir)
         val ev = Tables.events(s, dir)
           .select(col("event_id"), col("event_type"), col("value"))
         ev.write.mode("overwrite").orc(s"$base/orc")
@@ -1187,8 +1174,7 @@ object JoinQueries {
       "x154_deletion_vectors",
       (s, dir) => {
         import graft.sources.Snapshots
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val path = s"${Scratch.dir}/graft_snap_dv_$tag"
+        val path = Scratch.forInput("snap_dv", dir)
         Snapshots.drop(s, path)
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
         val v1 = Snapshots.append(
@@ -1267,8 +1253,7 @@ object JoinQueries {
       "x155_bloom_point_lookup",
       (s, dir) => {
         import graft.sources.Snapshots
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val path = s"${Scratch.dir}/graft_snap_bloom_$tag"
+        val path = Scratch.forInput("snap_bloom", dir)
         Snapshots.drop(s, path)
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), md5(col("text")).as("key"),
@@ -1313,8 +1298,7 @@ object JoinQueries {
       "x157_snapshot_merge",
       (s, dir) => {
         import graft.sources.Snapshots
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val path = s"${Scratch.dir}/graft_snap_merge_$tag"
+        val path = Scratch.forInput("snap_merge", dir)
         Snapshots.drop(s, path)
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("text"), col("source"))
@@ -1391,8 +1375,7 @@ object JoinQueries {
       "x158_snapshot_optimize_zorder",
       (s, dir) => {
         import graft.sources.Snapshots
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val path = s"${Scratch.dir}/graft_snap_optz_$tag"
+        val path = Scratch.forInput("snap_optz", dir)
         Snapshots.drop(s, path)
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("text"), col("n_chars"))
@@ -1446,8 +1429,7 @@ object JoinQueries {
       "x160_snapshot_history",
       (s, dir) => {
         import graft.sources.Snapshots
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val path = s"${Scratch.dir}/graft_snap_hist_$tag"
+        val path = Scratch.forInput("snap_hist", dir)
         Snapshots.drop(s, path)
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("text"), col("source"))

@@ -1146,8 +1146,7 @@ object PipelineQueries {
       "x148_inverted_index_bm25",
       (s, dir) => {
         import graft.text.InvertedIndex
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val path = s"${Scratch.dir}/graft_invidx_$tag"
+        val path = Scratch.forInput("invidx", dir)
         val docs = Tables.documents(s, dir)
         InvertedIndex.writeIndex(
           docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", path,
@@ -1179,8 +1178,7 @@ object PipelineQueries {
         import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         import graft.text.InvertedIndex
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val path = s"${Scratch.dir}/graft_invidx_stream_$tag"
+        val path = Scratch.forInput("invidx_stream", dir)
         graft.sources.Partitioned.deleteTree(s, path)
         val docs = Tables.documents(s, dir)
           .select(col("doc_id").cast("long"), col("text"))
@@ -1498,8 +1496,7 @@ object PipelineQueries {
       "x145_incremental_rollup",
       (s, dir) => {
         import graft.operators.DeltaRollup
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val path = s"${Scratch.dir}/graft_rollup_$tag"
+        val path = Scratch.forInput("rollup", dir)
         DeltaRollup.drop(s, path)
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("source"), col("text"))
@@ -2272,8 +2269,7 @@ object PipelineQueries {
     QueryDef(
       "x104_pretrain_dataset_staged",
       (s, dir) => pretrainPipeline(s, dir, stagePath = Some(
-        s"${Scratch.dir}/graft_pretrain_stage_" +
-          dir.replaceAll("[^A-Za-z0-9.]", "_"))),
+        Scratch.forInput("pretrain_stage", dir))),
       Some(pretrainOracleSql)),
 
 
@@ -2450,8 +2446,7 @@ object PipelineQueries {
       "x131_cms_rollup",
       (s, dir) => {
         import graft.functions.CountMin
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_cms_rollup_$tag"
+        val path = Scratch.forInput("cms_rollup", dir)
         val toks = Tables.documents(s, dir)
           .select(col("doc_id"),
             explode(split(lower(trim(col("text"))), "\\s+")).as("word"))
@@ -2648,8 +2643,7 @@ object PipelineQueries {
       "x115_sketch_rollup",
       (s, dir) => {
         import graft.functions.Hll
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_hll_rollup_$tag"
+        val path = Scratch.forInput("hll_rollup", dir)
         val toks = Tables.documents(s, dir)
           .select(col("doc_id"), col("source"),
             explode(split(lower(trim(col("text"))), "\\s+")).as("word"))
@@ -2729,8 +2723,7 @@ object PipelineQueries {
     QueryDef(
       "x78_shard_manifest",
       (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_shards_$tag"
+        val path = Scratch.forInput("shards", dir)
         Pipeline.writeShards(Tables.documents(s, dir), "doc_id", "text",
           path, nShards = 8)
       },
@@ -2840,8 +2833,7 @@ object PipelineQueries {
     QueryDef(
       "x87_jsonl_ingest",
       (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val path = s"${Scratch.dir}/graft_jsonl_$tag"
+        val path = Scratch.forInput("jsonl", dir)
         val line = to_json(struct(col("doc_id"), col("lang"), col("source"), col("n_chars")))
         Tables.documents(s, dir)
           .select(when(col("doc_id") % 97 === 0, substring(line, 1, 10))
@@ -2876,8 +2868,7 @@ object PipelineQueries {
     QueryDef(
       "x88_schema_evolution",
       (s, dir) => {
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val path = s"${Scratch.dir}/graft_evo_$tag"
+        val path = Scratch.forInput("evo", dir)
         val docs = Tables.documents(s, dir)
         docs.filter(col("doc_id") % 2 === 0)
           .select(col("doc_id"), col("source"), col("n_chars"))

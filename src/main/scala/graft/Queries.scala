@@ -89,8 +89,8 @@ object Queries {
     * (id, shard, neighbor list — what the index persisted); vectors,
     * norms and every cosine come from the embeddings table, and the walk
     * itself — best-first beam with a visited set, candidate queue and
-    * width-48 result list, exactly `Nsw.Graph.search` — is replayed one
-    * state-machine step per recursive row: an 'S' step pops the best
+    * width-48 result list, exactly `Hnsw`'s layer-0 `searchLayer`, the
+    * NSW walk — is replayed one state-machine step per recursive row: an 'S' step pops the best
     * candidate (termination when the queue is empty or its best falls
     * below the worst kept), an 'E' step admits ONE fresh neighbor
     * (skip-scanning past already-visited ones in-list, so iterations
@@ -1154,8 +1154,7 @@ object Queries {
       "x112_ann_hnsw_indexed",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_hnsw_index_$tag"
+        val path = Scratch.forInput("hnsw_index", dir)
         graft.similarity.Hnsw.writeIndex(
           emb.filter(col("vec_id") % 3 =!= 0), "embedding", "vec_id", path,
           numShards = 8)
@@ -1197,8 +1196,7 @@ object Queries {
         import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
         val emb = Tables.embeddings(s, dir)
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_hnsw_stream_$tag"
+        val path = Scratch.forInput("hnsw_stream", dir)
         graft.similarity.Hnsw.writeIndex(
           emb.filter(col("vec_id") % 3 === 0), "embedding", "vec_id", path,
           numShards = 8)
@@ -1244,8 +1242,7 @@ object Queries {
       "x73_ann_nsw_indexed",
       (s, dir) => {
         val emb = Tables.embeddings(s, dir)
-        val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val path = s"${Scratch.dir}/graft_nsw_index_$tag"
+        val path = Scratch.forInput("nsw_index", dir)
         graft.similarity.Nsw.writeIndex(
           emb.filter(col("vec_id") % 3 =!= 0), "embedding", "vec_id",
           path, numShards = 8)

@@ -44,6 +44,18 @@ object Scratch {
     f.getAbsolutePath
   }
 
+  /** `input` with every character but an ASCII letter or digit replaced
+    * by `_`: legal in a path segment and in a catalog table name.
+    */
+  def tag(input: String): String = input.replaceAll("[^A-Za-z0-9]", "_")
+
+  /** The scratch path `graft_<name>_<tag(input)>` under [[dir]]: one per
+    * query and input directory, so runs over two scale factors in one
+    * JVM never share an index or a table.
+    */
+  def forInput(name: String, input: String): String =
+    s"$dir/graft_${name}_${tag(input)}"
+
   private def deleteRec(f: File): Unit = {
     val kids = f.listFiles()
     if (kids != null) kids.foreach(deleteRec)

@@ -2,10 +2,11 @@ package graft.similarity
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.HashRandom
+import graft.sources.{MetaJson, Partitioned}
 
 /** Hierarchical navigable small worlds (Malkov & Yashunin 2016,
   * "Efficient and robust approximate nearest neighbor search using
@@ -17,10 +18,17 @@ import graft.functions.HashRandom
   * layer. Search cost becomes O(log n) hops to reach the right
   * neighborhood instead of NSW's flat-graph walk from a fixed entry.
   *
-  * Distribution is the [[Nsw]] architecture unchanged: hash-sharded
-  * corpus, per-shard in-memory graph via `mapPartitions` (genuinely
-  * imperative adjacency state — the documented last-resort tier),
-  * broadcast queries walking every shard, global bounded top-k merge.
+  * One graph serves both families: [[Nsw]] is this graph with every node
+  * on level 0 ([[Flat]]) — a single layer, entry = the first node, no
+  * descent, the layer-0 degree cap `2m`. The shard assignment, the
+  * build, the rebuild from stored rows, the walk and the touched-shard
+  * append below are written once and take the node-level function
+  * ([[levelOf]] here, [[Flat]] for NSW).
+  *
+  * Distribution: hash-sharded corpus, per-shard in-memory graph via
+  * `mapPartitions` (genuinely imperative adjacency state — the
+  * documented last-resort tier), broadcast queries walking every shard,
+  * global bounded top-k merge.
   *
   * Determinism: levels are a pure function of the node id (the
   * [[HashRandom]] md5-free splitmix device, `floor(−ln(u)·mL)`),
@@ -47,7 +55,8 @@ object Hnsw {
   val MaxShardRows: Int = 1000000
 
   /** Effective bound — a test seam so the guard is exercisable without
-    * a million-row build; production code never reassigns it.
+    * a million-row build; production code never reassigns it. It bounds
+    * [[Nsw]] shards too.
     */
   private[graft] var shardRowBound: Int = MaxShardRows
 
@@ -59,6 +68,9 @@ object Hnsw {
     val u = HashRandom.uniform(seed, 7L, id)
     math.floor(-math.log(u) / math.log(m.toDouble)).toInt
   }
+
+  /** Every node on level 0: the flat [[Nsw]] graph. */
+  private[similarity] val Flat: Long => Int = _ => 0
 
   /** One shard's layered graph: id-sorted nodes, per-layer adjacency
     * over node indices. Entry = the max-level node (min index on ties).
@@ -163,8 +175,8 @@ object Hnsw {
       * a persisted shard); the entry is re-seeded as the prefix's first
       * max-level node — exactly what the original insertion loop
       * tracked, since insertion is id-ascending — then insertion
-      * continues unchanged. The [[Nsw]] `insertFrom` contract lifted to
-      * the layered graph.
+      * continues unchanged. On a flat graph this is NSW's construction:
+      * each node links to its m nearest among the prefix, both ways.
       */
     def insertFrom(from: Int): Unit = {
       if (ids.isEmpty) return
@@ -214,7 +226,26 @@ object Hnsw {
       val start = descend(v, nv, levelsTop, 0, ids.length)
       searchLayer(v, nv, start, 0, width, ids.length)
     }
+
+    /** The stored row of node `i`: `layers(l)` is layer l's sorted
+      * neighbor-ID list, `level + 1` lists.
+      */
+    def row(i: Int, shard: Int): (Long, Seq[Double], Int, Seq[Seq[Long]], Int) =
+      (ids(i), vecs(i).toSeq, levels(i),
+        (0 to levels(i)).map(l => adj(l)(i).map(ids(_)).sorted.toSeq), shard)
+
+    /** Load node `i`'s stored `layers` (neighbor ids, no re-linking). */
+    def preload(i: Int, layers: Seq[Seq[Long]], idx: Map[Long, Int]): Unit =
+      layers.zipWithIndex.foreach { case (nbs, l) =>
+        if (l <= levels(i)) adj(l)(i) ++= nbs.flatMap(idx.get)
+      }
   }
+
+  /** The shard of a node id — explicit `pmod(xxhash64(id), numShards)`,
+    * so an append batch lands in the same shards the build used.
+    */
+  private def shardOf(id: Column, numShards: Int): Column =
+    pmod(xxhash64(id), lit(numShards.toLong)).cast("int")
 
   private def collectQueries(
       queries: DataFrame, featCol: String, queryIdCol: String)
@@ -222,7 +253,7 @@ object Hnsw {
     val spark = queries.sparkSession
     import spark.implicits._
     require(graft.Tables.atMostRows(queries, MaxQueries),
-      s"HNSW search broadcasts the query vectors; got > $MaxQueries rows — " +
+      s"graph search broadcasts the query vectors; got > $MaxQueries rows — " +
         "swap the arguments or batch the queries")
     queries
       .select(col(queryIdCol).cast("long"), col(featCol).cast("array<double>"))
@@ -231,11 +262,26 @@ object Hnsw {
       .sortBy(_._1)
   }
 
+  /** Walk one in-memory shard for every broadcast query: width
+    * `max(ef, k + 1)`, self and tombstoned hits dropped, first k kept.
+    */
+  private def walk(
+      g: Graph, qs: Array[(Long, Array[Double], Double)], k: Int, ef: Int,
+      excludeSelf: Boolean, tombstones: Set[Long]): Iterator[(Long, Long, Double)] =
+    qs.iterator.flatMap { case (qid, qv, qn) =>
+      g.search(qv, qn, math.max(ef, k + 1))
+        .iterator
+        .map(i => (qid, g.ids(i), g.cos(qv, qn, i)))
+        .filter { case (q, cid, _) =>
+          (!excludeSelf || q != cid) && !tombstones.contains(cid) }
+        .take(k)
+    }
+
   /** Persist per-shard HNSW graphs: `<path>/nodes` parquet partitioned
     * by `__shard` with `(id, vec, level, layers)` where `layers(l)` is
     * layer l's sorted neighbor-ID list (length level+1), plus
-    * `<path>/meta` with the build parameters. Sharding is the [[Nsw]]
-    * contract — explicit `pmod(xxhash64(id), numShards)`.
+    * `<path>/meta` with the build parameters. Sharding is explicit
+    * `pmod(xxhash64(id), numShards)`, shared with [[Nsw]].
     */
   def writeIndex(
       corpus: DataFrame,
@@ -245,27 +291,31 @@ object Hnsw {
       numShards: Int = 8,
       m: Int = 8,
       efConstruction: Int = 32,
-      levelSeed: Long = 11L): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    buildGraphRows(corpus, featCol, corpusIdCol, numShards, m,
-      efConstruction, levelSeed)
-      .repartition(numShards, col("__shard"))
+      levelSeed: Long = 11L): Unit =
+    writeGraph(buildGraphRows(corpus, featCol, corpusIdCol, numShards, m,
+      efConstruction, levelSeed), path, numShards, m, efConstruction,
+      Seq("level_seed" -> levelSeed))
+
+  /** Write graph rows as `<path>/nodes`, one directory per shard, and
+    * the driver-written JSON meta sidecar (graft.sources.MetaJson):
+    * search/append/rebuild consult it on every call, and a one-row
+    * parquet dataset paid a Spark job per consultation.
+    */
+  private[similarity] def writeGraph(
+      rows: DataFrame, path: String, numShards: Int, m: Int,
+      efConstruction: Int, extraMeta: Seq[(String, Long)]): Unit = {
+    rows.repartition(numShards, col("__shard"))
       .write.mode("overwrite").partitionBy("__shard").parquet(s"$path/nodes")
-    // meta is a driver-written JSON sidecar (graft.sources.MetaJson):
-    // search/append/rebuild consult it on every call, and a one-row
-    // parquet dataset paid a Spark job per consultation
-    graft.sources.MetaJson.write(spark, s"$path/meta", Seq(
+    MetaJson.write(rows.sparkSession, s"$path/meta", Seq(
       "num_shards" -> numShards.toLong, "m" -> m.toLong,
-      "ef_construction" -> efConstruction.toLong,
-      "level_seed" -> levelSeed))
+      "ef_construction" -> efConstruction.toLong) ++ extraMeta)
   }
 
   /** Per-shard HNSW graphs as ROWS `(id, vec, level, layers, __shard)` —
-    * [[writeIndex]] minus the persistence, the [[Nsw.buildGraphRows]]
-    * contract lifted to the layered graph: checkpoint the frame, collect
-    * the structure for a walk-replay oracle, and search the very same
-    * graph with [[searchGraphRows]].
+    * [[writeIndex]] minus the persistence, so the realized adjacency is
+    * PINNABLE in-run: checkpoint the frame, collect the structure for a
+    * walk-replay oracle, and search the very same graph with
+    * [[searchGraphRows]].
     */
   def buildGraphRows(
       corpus: DataFrame,
@@ -277,29 +327,34 @@ object Hnsw {
       levelSeed: Long = 11L): DataFrame = {
     require(numShards > 0 && m > 1 && efConstruction >= m,
       s"need numShards>0, m>1, efConstruction>=m: $numShards $m $efConstruction")
+    layeredRows(corpus, featCol, corpusIdCol, numShards, m, efConstruction,
+      levelOf(_, m, levelSeed))
+  }
+
+  /** [[buildGraphRows]] under the node-level function `level`. */
+  private[similarity] def layeredRows(
+      corpus: DataFrame, featCol: String, corpusIdCol: String,
+      numShards: Int, m: Int, efConstruction: Int,
+      level: Long => Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val (mm, efc, seed) = (m, efConstruction, levelSeed)
+    val (mm, efc) = (m, efConstruction)
     corpus
       .select(col(corpusIdCol).cast("long").as("id"),
         col(featCol).cast("array<double>").as("vec"))
-      .withColumn("__shard",
-        pmod(xxhash64(col("id")), lit(numShards.toLong)).cast("int"))
+      .withColumn("__shard", shardOf(col("id"), numShards))
       .repartition(numShards, col("__shard"))
       .as[(Long, Seq[Double], Int)]
       .mapPartitions { it =>
+        // hash partitioning maps every shard wholly into one task; a
+        // task may hold several shards — group and build each
         it.toArray.groupBy(_._3).iterator.flatMap { case (shard, rows) =>
           val nodes = rows.map { case (id, v, _) => (id, v.toArray) }
             .sortBy(_._1)
           val g = new Graph(nodes.map(_._1), nodes.map(_._2),
-            nodes.map(n => levelOf(n._1, mm, seed)), mm, efc)
+            nodes.map(n => level(n._1)), mm, efc)
           g.build()
-          g.ids.indices.iterator.map { i =>
-            val layers = (0 to g.levels(i)).map { l =>
-              g.adj(l)(i).map(g.ids(_)).sorted.toSeq
-            }
-            (g.ids(i), g.vecs(i).toSeq, g.levels(i), layers, shard)
-          }
+          g.ids.indices.iterator.map(g.row(_, shard))
         }
       }
       .toDF("id", "vec", "level", "layers", "__shard")
@@ -318,7 +373,7 @@ object Hnsw {
     * tombstoned hits still occupy beam slots.
     */
   def deleteFromIndex(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
       ids: DataFrame,
       idCol: String): Long = {
@@ -327,15 +382,13 @@ object Hnsw {
     val present = spark.read.parquet(s"$path/nodes")
       .select(col("id").cast("long"))
       .join(del, Seq("id"), "left_semi")
-    val tsPath = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = tsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fresh =
-      if (!fs.exists(tsPath)) present
-      else present.join(spark.read.parquet(s"$path/tombstones"),
+      if (!Partitioned.exists(spark, tombstones(path))) present
+      else present.join(spark.read.parquet(tombstones(path)),
         Seq("id"), "left_anti")
     val pinned = fresh.coalesce(1).localCheckpoint(true)
     val n = pinned.count()
-    if (n > 0) pinned.write.mode("append").parquet(s"$path/tombstones")
+    if (n > 0) pinned.write.mode("append").parquet(tombstones(path))
     n
   }
 
@@ -349,10 +402,9 @@ object Hnsw {
     * are a pure id function, so survivor levels are unchanged), and
     * drops the tombstone list. Returns the number of survivors indexed.
     */
-  def rebuildWithoutTombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String): Long = {
+  def rebuildWithoutTombstones(spark: SparkSession, path: String): Long = {
     val ts = readTombstones(spark, path)
-    val meta = graft.sources.MetaJson.read(spark, s"$path/meta")
+    val meta = MetaJson.read(spark, s"$path/meta")
     val survivors = spark.read.parquet(s"$path/nodes")
       .select(col("id").cast("long").as("vec_id"),
         col("vec").cast("array<double>").as("embedding"))
@@ -371,17 +423,25 @@ object Hnsw {
     n
   }
 
+  private def tombstones(path: String): String = s"$path/tombstones"
+  private def tombstoneSwap(path: String): String = s"$path/tombstones__swap"
+
+  /** Rename `from` to `to`: the tombstone swap's one filesystem call
+    * that [[Partitioned]] does not cover.
+    */
+  private def rename(spark: SparkSession, from: String, to: String): Boolean = {
+    val src = new org.apache.hadoop.fs.Path(from)
+    src.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .rename(src, new org.apache.hadoop.fs.Path(to))
+  }
+
   /** Delete the tombstone list AND any `__swap` leftover — the only
     * correct way to intentionally clear tombstones once
     * [[healTombstones]] treats a lone swap as the authoritative list.
     */
-  private def dropTombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val tsPath = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val swap = new org.apache.hadoop.fs.Path(s"$path/tombstones__swap")
-    val fs = tsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(tsPath)) fs.delete(tsPath, true)
-    if (fs.exists(swap)) fs.delete(swap, true)
+  private def dropTombstones(spark: SparkSession, path: String): Unit = {
+    Partitioned.deleteTree(spark, tombstones(path))
+    Partitioned.deleteTree(spark, tombstoneSwap(path))
   }
 
   /** Complete a crashed tombstone clear: the write-new-then-swap in
@@ -393,33 +453,21 @@ object Hnsw {
     * search works on a read-only mount and two racing readers can't
     * fight over a rename.
     */
-  private def healTombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val tsPath = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val swap = new org.apache.hadoop.fs.Path(s"$path/tombstones__swap")
-    val fs = tsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(tsPath) && fs.exists(swap))
-      require(fs.rename(swap, tsPath),
-        s"tombstone crash recovery failed: $swap -> $tsPath")
+  private def healTombstones(spark: SparkSession, path: String): Unit = {
+    val (ts, swap) = (tombstones(path), tombstoneSwap(path))
+    if (!Partitioned.exists(spark, ts) && Partitioned.exists(spark, swap))
+      require(rename(spark, swap, ts),
+        s"tombstone crash recovery failed: $swap -> $ts")
   }
 
-  private def readTombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String): Set[Long] = {
-    val tsPath = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val swap = new org.apache.hadoop.fs.Path(s"$path/tombstones__swap")
-    val fs = tsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def readTombstones(spark: SparkSession, path: String): Set[Long] =
     // pure read: the live list if present, else a crashed clear's swap
     // (the kept list) — no rename on the read path
-    val src =
-      if (fs.exists(tsPath)) Some(tsPath)
-      else if (fs.exists(swap)) Some(swap)
-      else None
-    src match {
-      case Some(p) => spark.read.parquet(p.toString)
-        .collect().map(_.getLong(0)).toSet
+    Seq(tombstones(path), tombstoneSwap(path))
+      .find(Partitioned.exists(spark, _)) match {
+      case Some(p) => spark.read.parquet(p).collect().map(_.getLong(0)).toSet
       case None => Set.empty
     }
-  }
 
   /** Search a persisted HNSW index: rebuild each shard's layered
     * adjacency from the stored neighbor lists (no re-linking) and run
@@ -427,7 +475,7 @@ object Hnsw {
     * Tombstoned nodes ([[deleteFromIndex]]) route but never emit.
     */
   def searchIndex(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
       queries: DataFrame,
       featCol: String,
@@ -435,7 +483,7 @@ object Hnsw {
       k: Int,
       efSearch: Int = 48,
       excludeSelf: Boolean = true): DataFrame = {
-    val meta = graft.sources.MetaJson.read(spark, s"$path/meta")
+    val meta = MetaJson.read(spark, s"$path/meta")
     searchGraphRows(spark.read.parquet(s"$path/nodes"), queries,
       featCol, queryIdCol, k,
       m = meta("m").toInt,
@@ -482,23 +530,13 @@ object Hnsw {
           val g = new Graph(sorted.map(_._1), sorted.map(_._2.toArray),
             sorted.map(_._3), mm, efc)
           val idx = g.ids.zipWithIndex.toMap
-          sorted.zipWithIndex.foreach { case ((_, _, lvl, layers, _), i) =>
-            (0 to lvl).foreach { l =>
-              if (l < layers.length) g.adj(l)(i) ++= layers(l).flatMap(idx.get)
-            }
+          sorted.zipWithIndex.foreach { case ((_, _, _, layers, _), i) =>
+            g.preload(i, layers, idx)
           }
           // persisted entry contract: min id among max-level nodes
           val maxL = g.levels.max
           g.entry = g.levels.indexWhere(_ == maxL)
-          val ts = tsB.value
-          qB.value.iterator.flatMap { case (qid, qv, qn) =>
-            g.search(qv, qn, math.max(ef, kk + 1))
-              .iterator
-              .map(i => (qid, g.ids(i), g.cos(qv, qn, i)))
-              .filter { case (q, cid, _) =>
-                (!excl || q != cid) && !ts.contains(cid) }
-              .take(kk)
-          }
+          walk(g, qB.value, kk, ef, excl, tsB.value)
         }
       }
       .toDF("__qid", "__cid", "__cos")
@@ -523,12 +561,23 @@ object Hnsw {
       excludeSelf: Boolean = true): DataFrame = {
     require(k > 0 && m > 1 && efConstruction >= m && efSearch >= k,
       s"need k>0, m>1, efConstruction>=m, efSearch>=k: $k $m $efConstruction $efSearch")
+    topKOnTheFly(corpus, queries, featCol, corpusIdCol, queryIdCol, k, m,
+      efConstruction, efSearch, excludeSelf, levelOf(_, m, levelSeed))
+  }
+
+  /** [[cosineTopKHnsw]] under the node-level function `level`: each
+    * partition of the id-hashed corpus builds one graph and walks it.
+    */
+  private[similarity] def topKOnTheFly(
+      corpus: DataFrame, queries: DataFrame, featCol: String,
+      corpusIdCol: String, queryIdCol: String, k: Int, m: Int,
+      efConstruction: Int, efSearch: Int, excludeSelf: Boolean,
+      level: Long => Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val qB = spark.sparkContext.broadcast(
       collectQueries(queries, featCol, queryIdCol))
-    val (mm, efc, ef, seed, excl) = (m, efConstruction, efSearch, levelSeed, excludeSelf)
-    val kk = k
+    val (mm, efc, ef, kk, excl) = (m, efConstruction, efSearch, k, excludeSelf)
     val locals = graft.Tables.spread(corpus)
       .select(col(corpusIdCol).cast("long"), col(featCol).cast("array<double>"))
       .repartition(col(corpusIdCol))
@@ -539,15 +588,9 @@ object Hnsw {
         if (nodes.isEmpty) Iterator.empty
         else {
           val g = new Graph(nodes.map(_._1), nodes.map(_._2),
-            nodes.map(n => levelOf(n._1, mm, seed)), mm, efc)
+            nodes.map(n => level(n._1)), mm, efc)
           g.build()
-          qB.value.iterator.flatMap { case (qid, qv, qn) =>
-            g.search(qv, qn, math.max(ef, kk + 1))
-              .iterator
-              .map(idx => (qid, g.ids(idx), g.cos(qv, qn, idx)))
-              .filter { case (q, cid, _) => !excl || q != cid }
-              .take(kk)
-          }
+          walk(g, qB.value, kk, ef, excl, Set.empty)
         }
       }
       .toDF("__qid", "__cid", "__cos")
@@ -556,17 +599,35 @@ object Hnsw {
 
   /** Append a batch to a persisted HNSW index — the hnswlib/FAISS `add`
     * contract completing the graph family's production loop
-    * (build → append → search), the [[Nsw.appendToIndex]] shape lifted
-    * to the layered graph: only the shards the batch hashes into are
-    * read and rewritten (dynamic partition overwrite; untouched shards
-    * stay byte-identical), new nodes draw their geometric levels from
-    * the SAME pure id function recorded in `meta` — a node's level
-    * never depends on WHEN it arrives, the property that makes
-    * incremental HNSW sound — and are inserted in ascending id order
-    * into the resident layered graphs (resident adjacency preloaded,
+    * (build → append → search): only the shards the batch hashes into are
+    * read and rewritten ([[appendShards]]), new nodes draw their geometric
+    * levels from the SAME pure id function recorded in `meta` — a node's
+    * level never depends on WHEN it arrives, the property that makes
+    * incremental HNSW sound. Deterministic end to end, so the x112
+    * walk-replay oracle applies unchanged to a grown index.
+    */
+  def appendToIndex(
+      newRows: DataFrame,
+      featCol: String,
+      corpusIdCol: String,
+      path: String): Unit = {
+    val meta = MetaJson.read(newRows.sparkSession, s"$path/meta")
+    val (mm, seed) = (meta("m").toInt, meta("level_seed"))
+    appendShards(newRows, featCol, corpusIdCol, path, meta,
+      levelOf(_, mm, seed), identity, identity)
+  }
+
+  /** The touched-shard append of both graph indexes: new rows hash to
+    * their shards, ONLY the touched shards are read back (`layered` maps
+    * the stored rows to the `(id, vec, level, layers, __shard)` shape,
+    * `stored` maps them back), the new nodes are inserted in ascending
+    * id order after all resident nodes (resident adjacency preloaded,
     * entry re-seeded as the prefix's max-level node, exactly what the
-    * original insertion tracked). Deterministic end to end, so the
-    * x112 walk-replay oracle applies unchanged to a grown index.
+    * original insertion tracked — like any incremental ANN index the
+    * final graph depends on ingest history, but search over the
+    * persisted state stays deterministic), and the touched shard
+    * directories are replaced through [[Partitioned.replacePartitions]].
+    * Untouched shards' files are never read or written.
     *
     * Id hygiene: batch ids already present in the index are REJECTED
     * loudly (a second graph node under the same id would silently
@@ -577,26 +638,22 @@ object Hnsw {
     * cleared from `<path>/tombstones`, so the re-added vector is
     * searchable rather than permanently filtered.
     */
-  def appendToIndex(
-      newRows: DataFrame,
-      featCol: String,
-      corpusIdCol: String,
-      path: String): Unit = {
+  private[similarity] def appendShards(
+      newRows: DataFrame, featCol: String, corpusIdCol: String, path: String,
+      meta: Map[String, Long], level: Long => Int,
+      layered: DataFrame => DataFrame, stored: DataFrame => DataFrame): Unit = {
     val spark = newRows.sparkSession
     import spark.implicits._
-    val meta = graft.sources.MetaJson.read(spark, s"$path/meta")
-    val (numShards, mm, efc, seed) = (meta("num_shards").toInt,
-      meta("m").toInt, meta("ef_construction").toInt,
-      meta("level_seed"))
+    val (numShards, mm, efc) = (meta("num_shards").toInt,
+      meta("m").toInt, meta("ef_construction").toInt)
     val batch = newRows
       .select(col(corpusIdCol).cast("long").as("id"),
         col(featCol).cast("array<double>").as("vec"),
         lit(null).cast("array<array<bigint>>").as("layers"))
-      .withColumn("__shard",
-        pmod(xxhash64(col("id")), lit(numShards.toLong)).cast("int"))
+      .withColumn("__shard", shardOf(col("id"), numShards))
     val touched = batch.select(col("__shard")).distinct()
       .collect().map(_.getInt(0)).sorted
-    val resident = spark.read.parquet(s"$path/nodes")
+    val resident = layered(spark.read.parquet(s"$path/nodes"))
       .filter(col("__shard").isin(touched.map(Int.box): _*))
       .select(col("id").cast("long"), col("vec").cast("array<double>"),
         col("layers").cast("array<array<bigint>>"), col("__shard").cast("int"),
@@ -613,10 +670,9 @@ object Hnsw {
     // stale tombstones (id erased AND gone from the graph, now re-added)
     // must not keep filtering the fresh vector — clear them
     healTombstones(spark, path)
-    val tsPath = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val tsFs = tsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (tsFs.exists(tsPath)) {
-      val ts = spark.read.parquet(s"$path/tombstones")
+    val tsPath = tombstones(path)
+    if (Partitioned.exists(spark, tsPath)) {
+      val ts = spark.read.parquet(tsPath)
       val stale = ts.join(batch.select(col("id")), Seq("id"), "left_semi").count()
       if (stale > 0) {
         val keep = ts.join(batch.select(col("id")), Seq("id"), "left_anti")
@@ -628,11 +684,11 @@ object Hnsw {
           // the delete and the rename — no crash point loses the list;
           // a __swap leftover from a crash BEFORE the delete is stale
           // (the full old list still stands) and is overwritten here.
-          val tmp = new org.apache.hadoop.fs.Path(s"$path/tombstones__swap")
-          if (tsFs.exists(tmp)) tsFs.delete(tmp, true)
-          keep.write.mode("overwrite").parquet(tmp.toString)
-          tsFs.delete(tsPath, true)
-          require(tsFs.rename(tmp, tsPath),
+          val tmp = tombstoneSwap(path)
+          Partitioned.deleteTree(spark, tmp)
+          keep.write.mode("overwrite").parquet(tmp)
+          Partitioned.deleteTree(spark, tsPath)
+          require(rename(spark, tmp, tsPath),
             s"tombstone swap rename failed: $tmp -> $tsPath")
         } else dropTombstones(spark, path) // live list AND any stale swap
       }
@@ -648,36 +704,20 @@ object Hnsw {
           val old = rows.filter(!_._5).sortBy(_._1)
           val fresh = rows.filter(_._5).sortBy(_._1)
           val all = old ++ fresh
-          // levels are a pure function of (id, seed) — recomputed, never
+          // levels are a pure function of the id — recomputed, never
           // stored state that could drift
           val g = new Graph(all.map(_._1), all.map(_._2.toArray),
-            all.map(r => levelOf(r._1, mm, seed)), mm, efc)
+            all.map(r => level(r._1)), mm, efc)
           val idx = g.ids.zipWithIndex.toMap
           old.zipWithIndex.foreach { case ((_, _, layers, _, _), i) =>
-            if (layers != null) layers.zipWithIndex.foreach { case (nbs, l) =>
-              if (l < g.adj.length) g.adj(l)(i) ++= nbs.flatMap(idx.get)
-            }
+            if (layers != null) g.preload(i, layers, idx)
           }
           g.insertFrom(old.length)
-          g.ids.indices.iterator.map { i =>
-            val layers = (0 to g.levels(i)).map { l =>
-              g.adj(l)(i).map(g.ids(_)).sorted.toSeq
-            }
-            (g.ids(i), g.vecs(i).toSeq, g.levels(i), layers, shard)
-          }
+          g.ids.indices.iterator.map(g.row(_, shard))
         }
       }
       .toDF("id", "vec", "level", "layers", "__shard")
-      // materialize BEFORE overwriting the partitions being read
-      .localCheckpoint(true)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try updated
-      .repartition(math.max(touched.length, 1), col("__shard"))
-      .write.mode("overwrite").partitionBy("__shard").parquet(s"$path/nodes")
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    Partitioned.replacePartitions(spark, s"$path/nodes",
+      touched.toSeq.map(t => s"__shard=$t"), stored(updated), "__shard"): Unit
   }
 }

@@ -394,9 +394,11 @@ object Ivf {
     *
     * Consume-then-compact: like the dedup indexes, any frame still
     * pinning pre-compaction file lists must be materialized first — the
-    * overwrite replaces the directory. HNSW needs no analogue:
-    * [[Hnsw.appendToIndex]] rewrites touched shards wholesale (dynamic
-    * partition overwrite), so its file count never grows per batch.
+    * overwrite replaces the directory. The graph indexes need no
+    * analogue: [[Hnsw.appendToIndex]] and [[Nsw.appendToIndex]] replace
+    * each touched shard directory wholesale
+    * ([[Partitioned.replacePartitions]]), so their file count never
+    * grows per batch.
     */
   def compactIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit =

@@ -20,13 +20,15 @@ import org.apache.spark.sql.functions.col
   * everything if the filter column isn't a partition column).
   *
   * The persisted index tiers (exact hash, MinHash-LSH, semantic, IVF,
-  * inverted) and [[Upsert]] rewrite their partitioned directories through
-  * the two protocols here, so each tier states only what to keep:
+  * inverted, and the NSW and HNSW graphs) and [[Upsert]] rewrite their
+  * partitioned directories through the two protocols here, so each tier
+  * states only what to keep:
   *  - [[compactInPlace]] collapses a directory's accumulated append files
   *    to one file per partition and proves the row count unchanged;
   *  - [[replacePartitions]] drops a set of partition directories and
-  *    appends their survivors (erasure, merge), so a partition drained to
-  *    empty vanishes and untouched partitions keep their files.
+  *    appends their survivors (erasure, merge, a graph shard grown by an
+  *    append), so a partition drained to empty vanishes and untouched
+  *    partitions keep their files.
   *
   * Neither is crash-safe: both hold the rewritten rows only in the block
   * manager between deleting the old files and writing the new ones (see
@@ -150,6 +152,9 @@ object Partitioned {
     *
     * Crash window: between the deletes and the append the survivors exist
     * only in the executors' block managers. A crash there loses them.
+    * Every caller shares this window: the exact-hash, MinHash-LSH,
+    * semantic, IVF and inverted-index erasures, [[Upsert]]'s merge, and
+    * the NSW and HNSW graph appends, where a crash drops a touched shard.
     */
   def replacePartitions(spark: SparkSession, dir: String,
       partDirs: Seq[String], kept: DataFrame, partCols: String*): Long = {

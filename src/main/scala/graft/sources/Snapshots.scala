@@ -110,9 +110,8 @@ object Snapshots {
     */
   def activeFiles(spark: SparkSession, path: String, v: Int): Seq[String] = {
     require(versions(spark, path).contains(v), s"no committed version $v at $path")
-    val f = fs(spark, path)
     val p = new org.apache.hadoop.fs.Path(s"${logDir(path)}/v=$v/_files.json")
-    org.json4s.jackson.JsonMethods.parse(readSmallFile(f, p)) match {
+    org.json4s.jackson.JsonMethods.parse(MetaJson.readText(spark, p.toString)) match {
       case org.json4s.JArray(xs) =>
         xs.collect { case org.json4s.JString(s) => s }.sorted
       case other => throw new IllegalStateException(
@@ -167,7 +166,7 @@ object Snapshots {
     val f = fs(spark, path)
     if (!f.exists(p)) None
     else Some(org.apache.spark.sql.types.DataType
-      .fromJson(readSmallFile(f, p))
+      .fromJson(MetaJson.readText(spark, p.toString))
       .asInstanceOf[org.apache.spark.sql.types.StructType])
   }
 
@@ -219,7 +218,7 @@ object Snapshots {
     val p = new org.apache.hadoop.fs.Path(s"${logDir(path)}/v=$v/_dv.json")
     val f = fs(spark, path)
     if (!f.exists(p)) Seq.empty
-    else org.json4s.jackson.JsonMethods.parse(readSmallFile(f, p)) match {
+    else org.json4s.jackson.JsonMethods.parse(MetaJson.readText(spark, p.toString)) match {
       case org.json4s.JArray(xs) =>
         xs.collect { case org.json4s.JString(s) => s }
       case _ => Seq.empty
@@ -417,9 +416,7 @@ object Snapshots {
     }
     val txt = org.json4s.jackson.JsonMethods.compact(
       org.json4s.jackson.JsonMethods.render(JObject(perFile)))
-    val p = new org.apache.hadoop.fs.Path(s"$dirAbs/_stats.json")
-    val out = p.getFileSystem(conf).create(p, false)
-    try out.write(txt.getBytes("UTF-8")) finally out.close()
+    MetaJson.writeText(spark, s"$dirAbs/_stats.json", txt, overwrite = false)
   }
 
   /** Load the `_stats.json` zone maps for a set of ACTIVE relative files
@@ -437,7 +434,7 @@ object Snapshots {
         val p = new org.apache.hadoop.fs.Path(s"$path/$dir/_stats.json")
         if (!f.exists(p)) Map.empty[String, Map[String, (BigDecimal, BigDecimal)]]
         else {
-          val txt = readSmallFile(f, p)
+          val txt = MetaJson.readText(spark, p.toString)
           val names = files.map(r => r.drop(dir.length + 1) -> r).toMap
           org.json4s.jackson.JsonMethods.parse(txt) match {
             case JObject(perFile) => perFile.collect {
@@ -562,7 +559,6 @@ object Snapshots {
       .select(relCol.as("__rel"), col(colName).cast("string").as("__key"))
       .groupBy(col("__rel")).agg(agg(col("__key")).as("__bloom"))
       .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
-    val f = fs(spark, path)
     val b64 = java.util.Base64.getEncoder
     perFile.keys.groupBy(r => r.substring(0, r.lastIndexOf('/'))).foreach {
       case (dir, files) =>
@@ -570,10 +566,8 @@ object Snapshots {
           val name = rel.drop(dir.length + 1)
           "\"" + name + "\":\"" + b64.encodeToString(perFile(rel)) + "\""
         }.mkString("{", ",", "}")
-        val p = new org.apache.hadoop.fs.Path(
-          s"$path/$dir/${bloomSidecar(colName)}")
-        val out = f.create(p, true)
-        try out.write(body.getBytes("UTF-8")) finally out.close()
+        MetaJson.writeText(spark, s"$path/$dir/${bloomSidecar(colName)}",
+          body, overwrite = true)
     }
     perFile.size
   }
@@ -596,7 +590,7 @@ object Snapshots {
           Map.empty[String, org.apache.spark.util.sketch.BloomFilter]
         else {
           val names = files.map(r => r.drop(dir.length + 1) -> r).toMap
-          org.json4s.jackson.JsonMethods.parse(readSmallFile(f, p)) match {
+          org.json4s.jackson.JsonMethods.parse(MetaJson.readText(spark, p.toString)) match {
             case JObject(perFile) => perFile.collect {
               case (fname, JString(enc)) if names.contains(fname) =>
                 names(fname) -> org.apache.spark.util.sketch.BloomFilter
@@ -749,7 +743,7 @@ object Snapshots {
     versions(spark, path).reverseIterator.flatMap { v =>
       val p = new org.apache.hadoop.fs.Path(s"${logDir(path)}/v=$v/_txn.json")
       if (!f.exists(p)) None
-      else org.json4s.jackson.JsonMethods.parse(readSmallFile(f, p)) match {
+      else org.json4s.jackson.JsonMethods.parse(MetaJson.readText(spark, p.toString)) match {
         case JObject(fields) =>
           val m = fields.toMap
           (m.get("app"), m.get("batch")) match {
@@ -760,18 +754,6 @@ object Snapshots {
         case _ => None
       }
     }.nextOption()
-  }
-
-  /** Slurp a small bookkeeping file (schema/txn/stats sidecars). */
-  private def readSmallFile(
-      f: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
-    val in = f.open(p)
-    try {
-      val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-      in.readFully(bytes)
-      new String(bytes, "UTF-8")
-    } finally in.close()
   }
 
   /** Commit an ERASURE of rows matching `cond`; returns the new
@@ -1138,7 +1120,7 @@ object Snapshots {
       val opP = new org.apache.hadoop.fs.Path(s"${logDir(path)}/v=$v/_op.json")
       val op =
         if (!f.exists(opP)) "unknown"
-        else org.json4s.jackson.JsonMethods.parse(readSmallFile(f, opP)) match {
+        else org.json4s.jackson.JsonMethods.parse(MetaJson.readText(spark, opP.toString)) match {
           case JObject(fields) => fields.toMap.get("op") match {
             case Some(JString(o)) => o
             case _ => "unknown"
@@ -1272,45 +1254,22 @@ object Snapshots {
     val staged = s"${logDir(path)}/_staged_v${v}_" +
       java.util.UUID.randomUUID().toString.take(8)
     f0.mkdirs(new org.apache.hadoop.fs.Path(staged))
-    locally {
-      val out = f0.create(
-        new org.apache.hadoop.fs.Path(s"$staged/_files.json"), false)
-      val body = (keepFiles ++ newRel).sorted
-        .map(r => "\"" + r.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-        .mkString("[", ",", "]")
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-    }
-    schema.foreach { s =>
-      val out = f0.create(
-        new org.apache.hadoop.fs.Path(s"$staged/_schema.json"), false)
-      try out.write(s.json.getBytes("UTF-8")) finally out.close()
-    }
+    def stage(name: String, body: String): Unit =
+      MetaJson.writeText(spark, s"$staged/$name", body, overwrite = false)
+    stage("_files.json", MetaJson.stringArray((keepFiles ++ newRel).sorted))
+    schema.foreach(s => stage("_schema.json", s.json))
     txn.foreach { case (app, batch) =>
-      val out = f0.create(
-        new org.apache.hadoop.fs.Path(s"$staged/_txn.json"), false)
-      try out.write(s"""{"app":"$app","batch":$batch}""".getBytes("UTF-8"))
-      finally out.close()
+      stage("_txn.json", s"""{"app":"$app","batch":$batch}""")
     }
     // operation provenance for describeHistory (DESCRIBE HISTORY)
-    if (op != "write") {
-      val out = f0.create(
-        new org.apache.hadoop.fs.Path(s"$staged/_op.json"), false)
-      try out.write(s"""{"op":"$op"}""".getBytes("UTF-8")) finally out.close()
-    }
+    if (op != "write") stage("_op.json", s"""{"op":"$op"}""")
     // Deletion-vector sidecar list: absent hint = CARRY the previous
     // version's DVs (an append never resurrects DV-dead rows); an
     // explicit hint sets the list (deleteWhereDV adds one, compact and
     // a fresh table clear them, rollback restores the target's).
     val dvFiles = dvHint.getOrElse(
       if (v > 1) activeDvFiles(spark, path, v - 1) else Seq.empty)
-    if (dvFiles.nonEmpty) {
-      val out = f0.create(
-        new org.apache.hadoop.fs.Path(s"$staged/_dv.json"), false)
-      val body = dvFiles.sorted
-        .map(r => "\"" + r.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-        .mkString("[", ",", "]")
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-    }
+    if (dvFiles.nonEmpty) stage("_dv.json", MetaJson.stringArray(dvFiles.sorted))
     require(f0.rename(new org.apache.hadoop.fs.Path(staged), manifestDir),
       s"manifest publish failed at $path version $v: rename refused " +
         "(concurrent writer detected — Snapshots is single-writer)")

@@ -254,7 +254,6 @@ class AnnSpec extends SparkSpec {
     val hPath = s"${Scratch.sub("hnsw-bound")}/idx"
     val nPath = s"${Scratch.sub("nsw-bound")}/idx"
     graft.similarity.Hnsw.shardRowBound = 8
-    graft.similarity.Nsw.shardRowBound = 8
     try {
       val eh = intercept[Exception] {
         graft.similarity.Hnsw.writeIndex(df, "embedding", "vec_id", hPath,
@@ -268,7 +267,6 @@ class AnnSpec extends SparkSpec {
       assert(causeChain(en).exists(_.contains("MaxShardRows")), en.getMessage)
     } finally {
       graft.similarity.Hnsw.shardRowBound = graft.similarity.Hnsw.MaxShardRows
-      graft.similarity.Nsw.shardRowBound = graft.similarity.Nsw.MaxShardRows
     }
     // restored bound: the same build succeeds
     graft.similarity.Hnsw.writeIndex(df, "embedding", "vec_id", hPath,
@@ -506,6 +504,108 @@ class AnnSpec extends SparkSpec {
     val appended = batch.select("vec_id").collect().map(_.getLong(0)).toSet
     assert(appended.subsetOf(stored))
   }
+
+  /** SHA-256 of a graph frame's rows sorted by id, one line per row,
+    * array columns comma-joined: pins the realized adjacency itself,
+    * which the walk-replay oracles (searches over a given graph) do not.
+    */
+  private def graphHash(rows: DataFrame): String = {
+    val lines = rows.collect().sortBy(_.getAs[Long]("id")).map { r =>
+      r.toSeq.map {
+        case s: scala.collection.Seq[_] => s.map {
+          case inner: scala.collection.Seq[_] => inner.mkString(",")
+          case x => String.valueOf(x)
+        }.mkString("[", ";", "]")
+        case x => String.valueOf(x)
+      }.mkString("|")
+    }
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(lines.mkString("\n").getBytes("UTF-8"))
+      .map(b => f"$b%02x").mkString
+  }
+
+  test("NSW and HNSW graphs are pinned: built rows and the appended index hash unchanged") {
+    val df = clustered.cache()
+    val base = df.filter(col("vec_id") % 5 =!= 4)
+    val batch = df.filter(col("vec_id") % 5 === 4)
+    def nodes(path: String, cols: String*) =
+      spark.read.parquet(s"$path/nodes").select(cols.map(col): _*)
+    val nsw = graft.similarity.Nsw
+    assert(graphHash(nsw.buildGraphRows(df, "embedding", "vec_id",
+      numShards = 4)) == NswBuilt)
+    val nPath = s"${Scratch.sub("nsw-golden")}/idx"
+    nsw.writeIndex(base, "embedding", "vec_id", nPath, numShards = 4)
+    nsw.appendToIndex(batch, "embedding", "vec_id", nPath)
+    assert(graphHash(nodes(nPath, "id", "vec", "neighbors", "__shard")) ==
+      NswAppended)
+    val hnsw = graft.similarity.Hnsw
+    assert(graphHash(hnsw.buildGraphRows(df, "embedding", "vec_id",
+      numShards = 4)) == HnswBuilt)
+    val hPath = s"${Scratch.sub("hnsw-golden")}/idx"
+    hnsw.writeIndex(base, "embedding", "vec_id", hPath, numShards = 4)
+    hnsw.appendToIndex(batch, "embedding", "vec_id", hPath)
+    assert(graphHash(nodes(hPath, "id", "vec", "level", "layers", "__shard")) ==
+      HnswAppended)
+  }
+
+  test("NSW and HNSW appends leave untouched shards' files as they were") {
+    import org.apache.spark.sql.functions.{pmod, xxhash64, lit}
+    val df = clustered.cache()
+    // the batch: the fifth rep of each cluster that hashes to shard 0 or
+    // 1 of 4, so shards 2 and 3 are untouched
+    val shard = pmod(xxhash64(col("vec_id").cast("long")), lit(4L))
+    val inBatch = col("vec_id") % 5 === 4 && shard < 2
+    val base = df.filter(!inBatch)
+    val batch = df.filter(inBatch)
+    assert(batch.count() > 0)
+    val untouched = Seq(2, 3)
+    // file name -> length under each untouched shard directory
+    def shardFiles(path: String) = untouched.map { s =>
+      s -> new java.io.File(s"$path/nodes/__shard=$s").listFiles()
+        .map(f => f.getName -> f.length()).toMap
+    }.toMap
+    val indexes = Seq[(String, String => Unit, String => Unit)](
+      ("nsw",
+        p => graft.similarity.Nsw.writeIndex(base, "embedding", "vec_id", p,
+          numShards = 4),
+        p => graft.similarity.Nsw.appendToIndex(batch, "embedding", "vec_id", p)),
+      ("hnsw",
+        p => graft.similarity.Hnsw.writeIndex(base, "embedding", "vec_id", p,
+          numShards = 4),
+        p => graft.similarity.Hnsw.appendToIndex(batch, "embedding", "vec_id", p)))
+    indexes.foreach { case (name, write, append) =>
+      val path = s"${Scratch.sub(s"$name-untouched")}/idx"
+      write(path)
+      val before = shardFiles(path)
+      append(path)
+      assert(shardFiles(path) == before, s"$name rewrote an untouched shard")
+      assert(spark.read.parquet(s"$path/nodes").count() == df.count())
+    }
+  }
+
+  test("Nsw.appendToIndex rejects an id already in the graph") {
+    val df = clustered.cache()
+    val path = s"${Scratch.sub("nsw-dupe")}/idx"
+    graft.similarity.Nsw.writeIndex(df, "embedding", "vec_id", path,
+      numShards = 4)
+    val dup = intercept[IllegalArgumentException] {
+      graft.similarity.Nsw.appendToIndex(df.filter(col("vec_id") === 7L),
+        "embedding", "vec_id", path)
+    }
+    assert(dup.getMessage.contains("already present"), dup.getMessage)
+    assert(spark.read.parquet(s"$path/nodes").count() == df.count())
+  }
+
+  // computed from the NSW and HNSW implementations before NSW became
+  // HNSW's level-0 graph
+  private val NswBuilt =
+    "037aa946a696a433afc94a7959db040c9db7ca592786ee80925d353a2c62e56a"
+  private val NswAppended =
+    "71cae51f3ea06b2f69805ed10d859be6ea64930936fe4d699f49bc0fad1cbf26"
+  private val HnswBuilt =
+    "10aa5c85afad80cbb30fdd0367a7f232840dea141bd74453c03f2ee6d1587692"
+  private val HnswAppended =
+    "66c6d4cd4fa2477b8118853a59d3d4b77cdabf6f3d631924244d6de610035a08"
 
   test("persisted IVF index matches the in-memory IVF and prunes to probed cells") {
     val df = clustered.cache()
